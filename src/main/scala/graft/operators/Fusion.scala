@@ -88,7 +88,15 @@ object Fusion {
     * ONE job like [[rrf]], instead of an eager checkpoint + count pair
     * of driver actions per input list. The count long and the
     * (N+1−rank)·w/N arithmetic are the same ops on the same values as
-    * the former driver-side literals, so fused scores bit-match. */
+    * the former driver-side literals, so fused scores bit-match.
+    *
+    * Input contract: every ranking must be TOP-N-BOUNDED — a
+    * retriever's `.limit(N)` output (or a rank ≤ N filter of it), the
+    * shape every retriever in this codebase returns. The list-size
+    * count is an unpartitioned window, so its one task reads the whole
+    * input frame: over a top-N list that is N rows, over an unbounded
+    * frame it would be the corpus through a single task. The plan audit
+    * whitelists borda's global windows on exactly this contract. */
   def borda(rankings: Seq[(DataFrame, Double)], idCol: String,
       rankCol: String, topK: Int): DataFrame = {
     checkArgs(rankings.map(_._1), topK)

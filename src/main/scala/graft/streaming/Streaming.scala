@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.util.control.NonFatal
 
 /** Event projection for the custom-state operator. */
 case class UserEvent(user_id: Long, value: Double)
@@ -185,11 +186,7 @@ object Streaming {
     val prevParts = spark.conf.get(partsKey)
     val prevNoData = spark.conf.get(noDataKey)
     val target = sys.props.getOrElse("graft.stream.partitions", "8").toInt
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckptDir =
-      if (java.nio.file.Files.isWritable(shm))
-        Some(java.nio.file.Files.createTempDirectory(shm, s"graft-ckpt-$name-"))
-      else None
+    val ckpt = ephemeralCkpt(name)
     val q = try {
       spark.conf.set(partsKey, math.min(prevParts.toInt, target))
       // append-mode WINDOW aggregates only emit a closed window in a
@@ -203,7 +200,9 @@ object Streaming {
         .outputMode(mode)
         .format("memory")
         .queryName(name)
-      ckptDir.fold(w)(d => w.option("checkpointLocation", d.toString)).start()
+      ckpt.fold(w)(c => w.option("checkpointLocation", c.dir.toString)).start()
+    } catch {
+      case NonFatal(e) => ckpt.foreach(_.release()); throw e
     } finally {
       spark.conf.set(partsKey, prevParts)
       spark.conf.set(noDataKey, prevNoData)
@@ -242,14 +241,8 @@ object Streaming {
       }
       q.stop()
     } finally {
-      if (q.isActive) q.stop()
-      ckptDir.foreach { d =>
-        import scala.jdk.CollectionConverters._
-        // close the walk stream (it holds a directory fd)
-        scala.util.Using.resource(java.nio.file.Files.walk(d))(
-          _.iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p)))
-      }
+      try { if (q.isActive) q.stop() }
+      finally ckpt.foreach(_.release())
     }
     spark.table(name)
   }
@@ -300,30 +293,47 @@ object Streaming {
   }
 
   /** Ephemeral checkpoint placement for a sink started WITHOUT a caller
-    * checkpoint (the synchronous to-completion gates): the same tmpfs
-    * choice [[runToBatch]] documents — the checkpoint's offset/commit
-    * logs and the RocksDB changelog are the only fsync'd writes these
-    * one-batch runs perform, and billing disk syncs to an ephemeral
-    * run's metadata is pure noise. Falls back to Spark's own temp
+    * checkpoint (the synchronous to-completion gates) and for
+    * [[runToBatch]]: the checkpoint's offset/commit logs and the RocksDB
+    * changelog are the only fsync'd writes these one-batch runs perform,
+    * and billing disk syncs to an ephemeral run's metadata is pure
+    * noise, so the dir goes to tmpfs. Falls back to Spark's own temp
     * checkpoint (None) when /dev/shm is not writable. The dir is
     * deleted when the caller stops the query ([[withCleanup]]); a
     * durable deployment passes its own `checkpoint` and is untouched. */
-  private def ephemeralCkpt(name: String): Option[java.nio.file.Path] = {
+  private def ephemeralCkpt(name: String): Option[EphemeralCkpt] = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (java.nio.file.Files.isWritable(shm))
-      Some(java.nio.file.Files.createTempDirectory(shm, s"graft-ckpt-$name-"))
+      Some(new EphemeralCkpt(
+        java.nio.file.Files.createTempDirectory(shm, s"graft-ckpt-$name-")))
     else None
   }
 
-  /** Best-effort recursive delete of an ephemeral checkpoint dir —
-    * idempotent (deleteIfExists), safe to race between the stop() path
-    * and the termination listener. */
-  private def deleteCkptTree(dir: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    try scala.util.Using.resource(java.nio.file.Files.walk(dir))(
-      _.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p)))
-    catch { case _: java.io.IOException => () }
+  /** An ephemeral checkpoint dir with exactly ONE deleter. The stop()
+    * path, the termination listener (on the listener-bus thread) and a
+    * failed start may all ask for the delete; the first [[claim]] wins
+    * and every later one is a no-op. Two walkers deleting under each
+    * other make `Files.walk`'s lazy iterator throw
+    * `UncheckedIOException(NoSuchFileException)`, which is why the
+    * delete is never shared. The delete itself is best-effort: a dir
+    * left on tmpfs is a leak, never a reason for stop() to throw. */
+  private final class EphemeralCkpt(val dir: java.nio.file.Path) {
+    private val claimed = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+    /** True for exactly one caller: the one that must [[delete]]. */
+    def claim(): Boolean = claimed.compareAndSet(false, true)
+
+    /** Recursive delete, children first; swallows every non-fatal error. */
+    def delete(): Unit = {
+      import scala.jdk.CollectionConverters._
+      // close the walk stream (it holds a directory fd)
+      try scala.util.Using.resource(java.nio.file.Files.walk(dir))(
+        _.iterator().asScala.toSeq.reverse
+          .foreach(p => java.nio.file.Files.deleteIfExists(p)))
+      catch { case NonFatal(_) => () }
+    }
+
+    def release(): Unit = if (claim()) delete()
   }
 
   /** Delegating wrapper that deletes the ephemeral checkpoint when the
@@ -331,12 +341,15 @@ object Streaming {
     * termination listener (matched by runId) covers the paths the
     * wrapper can't see — a query dying on an exception, or stopped
     * through spark.streams.get/active — so failure paths release the
-    * RAM-backed tmpfs dir instead of leaking it until reboot. */
+    * RAM-backed tmpfs dir instead of leaking it until reboot. stop()
+    * claims the delete BEFORE stopping the query, so the termination
+    * event that the stop itself posts finds the dir already owned and
+    * the dir is gone when stop() returns. */
   private def withCleanup(q: org.apache.spark.sql.streaming.StreamingQuery,
-      dir: java.nio.file.Path): org.apache.spark.sql.streaming.StreamingQuery = {
+      ckpt: EphemeralCkpt): org.apache.spark.sql.streaming.StreamingQuery = {
     val streams = q.sparkSession.streams
     val qRunId = q.runId
-    streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       override def onQueryStarted(
           e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryProgress(
@@ -344,12 +357,18 @@ object Streaming {
       override def onQueryTerminated(
           e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
         if (e.runId == qRunId) {
-          deleteCkptTree(dir)
           streams.removeListener(this)
+          ckpt.release()
         }
-    })
+    }
+    streams.addListener(listener)
+    // a query that died before the listener was registered posted its
+    // termination event to nobody
+    if (!q.isActive) {
+      streams.removeListener(listener)
+      ckpt.release()
+    }
     new org.apache.spark.sql.streaming.StreamingQuery {
-      private def cleanup(): Unit = deleteCkptTree(dir)
       override def name: String = q.name
       override def id: java.util.UUID = q.id
       override def runId: java.util.UUID = q.runId
@@ -370,7 +389,10 @@ object Streaming {
       override def awaitTermination(timeoutMs: Long): Boolean =
         q.awaitTermination(timeoutMs)
       override def processAllAvailable(): Unit = q.processAllAvailable()
-      override def stop(): Unit = { try q.stop() finally cleanup() }
+      override def stop(): Unit = {
+        val owner = ckpt.claim()
+        try q.stop() finally if (owner) ckpt.delete()
+      }
       override def explain(): Unit = q.explain()
       override def explain(extended: Boolean): Unit = q.explain(extended)
     }
@@ -385,7 +407,11 @@ object Streaming {
       case some @ Some(_) => start(some)
       case None =>
         ephemeralCkpt(name) match {
-          case Some(dir) => withCleanup(start(Some(dir.toString)), dir)
+          case Some(ckpt) =>
+            val q = try start(Some(ckpt.dir.toString)) catch {
+              case NonFatal(e) => ckpt.release(); throw e
+            }
+            withCleanup(q, ckpt)
           case None => start(None)
         }
     }

@@ -12,7 +12,10 @@ import org.apache.spark.sql.execution.window.WindowExecBase
   * PlanAuditSpec runs [[sweep]] in `sbt test` and fails on any
   * unexplained flag, so the tripwire cannot silently rot.
   *
-  * Usage: runMain graft.tools.AuditPlans [sfDir]
+  * Usage: runMain graft.tools.AuditPlans [sfDir [outDir tag q1,q2,...]]
+  *
+  * With the three extra arguments it sweeps nothing and instead [[dump]]s
+  * the named gates' plans to `outDir/<gate>_<tag>.txt`.
   */
 object AuditPlans {
 
@@ -54,7 +57,13 @@ object AuditPlans {
     "q_curation_funnel" -> 1, "q_decontam_bloom" -> 3,
     "q_decontam_fuzzy" -> 4, "q_dedup_cluster" -> 2,
     "q_dedup_embedding" -> 2, "q_dedup_exact" -> 2, "q_dedup_minhash" -> 5,
-    "q_dedup_semantic" -> 6, "q_zorder_layout" -> 3,
+    "q_dedup_semantic" -> 6,
+    // zorder 3 → 2: the per-file stats aggregate (grouped by input file)
+    // runs once into a localCheckpoint-pinned frame that serves both the
+    // band cutoff and the skip gate, so its exchange is no longer in the
+    // audited plan; left: the gate row's single-partition aggregate + the
+    // output ORDER BY (plans/r18/q_zorder_layout_*)
+    "q_zorder_layout" -> 2,
     "q_dedup_ngram" -> 3, "q_dedup_remove" -> 2, "q_dedup_simhash" -> 5,
     "q_delete" -> 2, "q_embed_normalize" -> 1, "q_embed_quantize" -> 1,
     "q_excel_dates" -> 1, "q_excel_roundtrip" -> 1, "q_except" -> 2,
@@ -63,10 +72,11 @@ object AuditPlans {
     "q_groupby_summaries" -> 2, "q_heavy_hitters" -> 3,
     // rrf: the BM25 side's 6 (the q_search_bm25 shape) + the fused
     // id-keyed aggregate; every fused frame is top-N-bounded.
-    // borda: its input lists are eagerly localCheckpoint-pinned
-    // (top-N-sized), so the audited plan starts at the checkpoints —
-    // one exchange for the fused aggregate.
-    "q_hybrid_rrf" -> 9, "q_hybrid_borda" -> 1,
+    // borda 1 → 9: its list sizes are in-plan count windows now, not a
+    // localCheckpoint + count per list, so the same two retriever
+    // pipelines as rrf sit inside the audited plan — rrf's 9
+    // (plans/r18/q_hybrid_borda_*)
+    "q_hybrid_rrf" -> 9, "q_hybrid_borda" -> 9,
     // eval: retriever lists are checkpoint-pinned; the fused aggregate,
     // three bounded qrels-hit aggregates, and the ideal-DCG TakeOrdered
     // account for the budget
@@ -91,14 +101,16 @@ object AuditPlans {
     // q_rank_eval's bounded hit/ideal metric aggregates, twice; the
     // extra exchange over q_rank_eval's 5 is saved by having no fusion
     "q_rank_eval_takedown" -> 3,
-    // batch ANN recall gates: the serve path's per-query ranking window
-    // (query-keyed, k-row state), the per-(query,id) dedup/semi-join of
-    // the containment check, and the 3-query exact side's TakeOrdered
-    // unions — all keyed or k-bounded, no corpus-global exchange; the
-    // LSH gate adds the cross-projection dedup, the PQ gate the
-    // candidate-window + rerank join
-    "q_sim_ivf_batch" -> 10, "q_sim_lsh_batch" -> 13,
-    "q_sim_pq_batch" -> 11,
+    // batch ANN recall gates: the serve path's and the exact side's
+    // per-query ranking windows (query-keyed, k-row state), the
+    // per-(query,id) semi-join of the containment check on each side,
+    // and the output ORDER BY — all keyed or k-bounded, no corpus-global
+    // exchange; the LSH gate adds the cross-projection dedup, the PQ
+    // gate the candidate-window leg. 10/13/11 → 5/6/6: the exact side is
+    // one bruteForceTopKBatch plan instead of a per-query TakeOrdered
+    // union (plans/r18/q_sim_{ivf,lsh,pq}_batch_*)
+    "q_sim_ivf_batch" -> 5, "q_sim_lsh_batch" -> 6,
+    "q_sim_pq_batch" -> 6,
     // filtered search: predicate + ranking ride the scan (TakeOrdered /
     // broadcast semi-join; no exchange at audit scale)
     "q_sim_filtered" -> 0, "q_sim_ivf_filtered" -> 0,
@@ -302,6 +314,8 @@ object AuditPlans {
       "corpus-constants join: build side is exactly ONE broadcast row (the in-memory index's lazy stats aggregate) crossed onto the per-term idf frame, which is bounded by the query's terms",
     "q_hybrid_rrf" ->
       "corpus-constants join (q_search_bm25's shape, on the lexical retriever): ONE broadcast stats row onto the term-bounded idf frame",
+    "q_hybrid_borda" ->
+      "corpus-constants join (q_search_bm25's shape, on the lexical retriever): ONE broadcast stats row onto the term-bounded idf frame",
     "q_search_bm25_batch" ->
       "corpus-constants join: build side is exactly ONE broadcast row (the in-memory index's lazy stats aggregate) crossed onto the per-term idf frame, which is bounded by the query workload's distinct terms",
     "q_rank_eval_batch" ->
@@ -310,6 +324,12 @@ object AuditPlans {
       "corpus-constants join (q_search_bm25_batch's shape): ONE broadcast stats row onto the term-bounded idf frame",
     "q_hybrid_rrf_batch" ->
       "batch ANN scoring: build side is the broadcast QUERY WORKLOAD (3 vectors; workload-sized by design), streamed side one corpus scan — every (row, query) pair scores map-side; the brute-force baseline the bucketed ANN families replace when selectivity matters",
+    "q_sim_ivf_batch" ->
+      "batch exact side (q_hybrid_rrf_batch's bruteForceTopKBatch shape): build side is the broadcast 3-query WORKLOAD, streamed side one corpus scan",
+    "q_sim_lsh_batch" ->
+      "batch exact side (q_hybrid_rrf_batch's bruteForceTopKBatch shape): build side is the broadcast 3-query WORKLOAD, streamed side one corpus scan",
+    "q_sim_pq_batch" ->
+      "batch exact side (q_hybrid_rrf_batch's bruteForceTopKBatch shape): build side is the broadcast 3-query WORKLOAD, streamed side one corpus scan",
     "q_rank_eval" ->
       "metric assembly joins: each build side is exactly ONE broadcast row (the ideal-DCG aggregate and the qrels total) crossed onto the one-row hit aggregate",
     "q_rank_eval_takedown" ->
@@ -379,7 +399,7 @@ object AuditPlans {
     "q_hybrid_rrf" ->
       "all three windows rank top-N-bounded frames (bm25_rank and the cosine rank after .limit(50), rrf_rank after .limit(25)) — the searchBm25 k-row idiom",
     "q_hybrid_borda" ->
-      "borda_rank runs AFTER .limit(k) over the fused top-25; the input lists are localCheckpoint-pinned top-50 frames",
+      "every window ranks or counts a top-N-bounded frame: bm25_rank and the cosine rank after .limit(50), each list's in-plan size count over that top-50 list (Fusion.borda's input contract), borda_rank after .limit(25)",
     "q_rank_eval" ->
       "both windows rank bounded frames: the ideal-DCG window AFTER .limit(k) over qrels, rrf_rank after .limit(25); the retriever lists are localCheckpoint-pinned",
     "q_rank_eval_takedown" ->
@@ -453,6 +473,26 @@ object AuditPlans {
         }
     }
 
+  /** Write each named gate's static physical plan (AQE off: the plan
+    * [[sweep]] audits) to `outDir/<gate>_<tag>.txt` in Spark's formatted
+    * explain layout, headed by the shuffle count the audit sees — the
+    * before/after evidence a change to [[expectedShuffles]] or a
+    * whitelist is made with. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, tag: String,
+      names: Seq[String]): Unit = {
+    val dir = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(outDir))
+    names.foreach { name =>
+      val fn = graft.Queries.all.getOrElse(name,
+        throw new IllegalArgumentException(s"no registered query '$name'"))
+      val qe = fn(spark, sfDir).queryExecution
+      java.nio.file.Files.writeString(dir.resolve(s"${name}_$tag.txt"),
+        s"-- $name: shuffles=${countShuffles(qe.executedPlan)} " +
+          s"global-windows=${countGlobalWindows(qe.executedPlan)}\n" +
+          qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = SparkSession.builder()
@@ -463,12 +503,17 @@ object AuditPlans {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    sweep(spark, sfDir).foreach { r =>
-      r.error match {
-        case Some(msg) => println(f"${r.name}%-26s ERROR ${msg.take(60)}")
-        case None =>
-          println(f"${r.name}%-26s shuffles=${r.shuffles}%-3d ${r.flags.mkString(",")}")
-      }
+    args.drop(1) match {
+      case Array(outDir, tag, names) =>
+        dump(spark, sfDir, outDir, tag, names.split(",").toSeq)
+      case _ =>
+        sweep(spark, sfDir).foreach { r =>
+          r.error match {
+            case Some(msg) => println(f"${r.name}%-26s ERROR ${msg.take(60)}")
+            case None =>
+              println(f"${r.name}%-26s shuffles=${r.shuffles}%-3d ${r.flags.mkString(",")}")
+          }
+        }
     }
     spark.stop()
   }

@@ -9,6 +9,15 @@ import graft.sources.Excel
 class ExcelSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Office-tool-written workbooks from the reference checkout's test
+    * dir, read in place and not vendored (FIXTURES.md §A.1). A test that
+    * needs one is cancelled, not failed, where the checkout is absent. */
+  private def referenceFixture(file: String): String = {
+    val path = java.nio.file.Paths.get("/root/reference/test", file)
+    assume(java.nio.file.Files.exists(path), s"reference fixture $path is absent")
+    path.toString
+  }
+
   test("export → import round-trip preserves values and types") {
     val src = GTable(Seq(
       (1L, "alpha", 1.5, true),
@@ -52,7 +61,7 @@ class ExcelSpec extends SparkSpec {
     // Same data as the reference's abc.csv (FIXTURES.md): header a,b,c
     // then 0/1/2 grid rows. Proves interop with office-tool output
     // (styles, theme, sharedStrings parts present).
-    val t = Excel.excelImport(spark, "/root/reference/test/abc.xlsx")
+    val t = Excel.excelImport(spark, referenceFixture("abc.xlsx"))
     assert(t.columns == Seq("a", "b", "c"))
     assert(t.size == 27) // 3^3 grid
     val sums = t.df.agg(sum("a"), sum("b"), sum("c")).head()
@@ -62,7 +71,7 @@ class ExcelSpec extends SparkSpec {
   test("reads the reference's data_types.xlsx (sharedStrings + sparse cells)") {
     // Mixed-type column with missing cells: must import without error,
     // with absent cells as null and sharedStrings resolved.
-    val t = Excel.excelImport(spark, "/root/reference/test/data_types.xlsx")
+    val t = Excel.excelImport(spark, referenceFixture("data_types.xlsx"))
     assert(t.size >= 5)
     assert(t.columns.length == 3)
     val rows = t.df.collect()
@@ -77,7 +86,7 @@ class ExcelSpec extends SparkSpec {
     // excel_import as typed dates, not as 44555.0. The value column is
     // heterogeneous so it stays a string column — the date cells must
     // render as dates, not serials.
-    val t = Excel.excelImport(spark, "/root/reference/test/data_types.xlsx")
+    val t = Excel.excelImport(spark, referenceFixture("data_types.xlsx"))
     val byName = t.df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(byName("d") == "2021-12-25", s"serial 44555 must decode, got ${byName("d")}")
     assert(byName("i") == "2021-12-22" || byName.values.exists(_ == "2021-12-22"),

@@ -603,6 +603,41 @@ class StreamingSpec extends SparkSpec {
       == Seq(0, 1))
   }
 
+  test("ephemeral checkpoint: stop() never throws and leaves no " +
+    "graft-ckpt dir behind, over repeated start/stop cycles") {
+    // the stop() path and the termination listener both ask for the
+    // tmpfs checkpoint's delete; only one may walk the tree, or the
+    // other's lazy Files.walk throws out of stop(). One cycle rarely
+    // hits the race, so it is run in a loop.
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import scala.jdk.CollectionConverters._
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    assume(java.nio.file.Files.isWritable(shm), s"$shm is not writable")
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def ckptDirs(): Set[String] =
+      scala.util.Using.resource(java.nio.file.Files.list(shm))(
+        _.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("graft-ckpt-")).toSet)
+    val root = "/tmp/graft-test/ckpt-cycles"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    (1 to 25).foreach { i =>
+      val before = ckptDirs()
+      val in = MemoryStream[(Long, Long, Double)]
+      val q = Streaming.zOrderedSink(in.toDF().toDF("k1", "k2", "v"),
+        s"$root/run=$i", Seq("k1", "k2"), filesPerBatch = 1)
+      val mine = ckptDirs() -- before
+      assert(mine.size == 1, s"cycle $i: expected one new checkpoint dir, got $mine")
+      try {
+        in.addData((i.toLong, 1L, 1.0), (i.toLong + 1, 2L, 2.0))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert((mine & ckptDirs()).isEmpty, s"cycle $i left $mine behind")
+    }
+    // every cycle really committed its batch before the stop
+    assert(spark.read.parquet((1 to 25).map(i => s"$root/run=$i/batch=0"): _*)
+      .count() == 50)
+  }
+
   test("nearDedupAgainstSink: per-batch Jaccard dedup against a fixed " +
       "corpus == batch anti-join; stream-internal near-dups both survive") {
     import graft.operators.Contamination

@@ -1,7 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
+/** Warm steady-state timing of every gate; prints one JSON line. A
+  * crashed gate's stack trace also goes to `<outDir>/failures.jsonl`
+  * (`outDir` = the first argument, else the working directory). */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val outDir = args.headOption.getOrElse(".")
+    GateFailures.reset(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.rocksDbState(SparkSession.builder()
@@ -30,6 +35,7 @@ object Bench {
         case e: Throwable =>
           failures += name
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          GateFailures.record(outDir, name, e)
       }
       name -> (System.nanoTime() - t0) / 1e9
     }

@@ -170,7 +170,7 @@ object Search {
     * its own. */
   /** `stats` is a LAZY one-row frame `(n_docs: long, total_len: long,
     * avg_len: double)`: the serve paths fold it into the query plan (a
-    * one-row broadcast into the tiny per-term idf frame), so building
+    * one-row broadcast onto the term-filtered postings), so building
     * and searching an in-memory index runs NO separate eager stats job.
     * Paths that need concrete constants (save/fold/upsert merges, the
     * streaming sink's per-batch stats write) force [[nDocs]]/[[avgLen]]/
@@ -188,7 +188,9 @@ object Search {
       * build-once/search-many reuse of an in-memory index stops
       * re-running the full-corpus stats aggregate inside every search
       * job. Same longs, same count→double cast, same division as the
-      * in-plan aggregate — scores bit-match either way. */
+      * in-plan aggregate — scores bit-match either way. Assumes an
+      * immutable corpus: once promoted, the constants are not
+      * recomputed if the source under `postings` changes. */
     @volatile private[operators] var promotedConsts: Option[(Double, Double)] =
       knownConsts
     private lazy val statsRow = {
@@ -821,26 +823,13 @@ object Search {
     loadBm25Index(spark, table)
   }
 
-  /** Okapi BM25 top-k: score(d, q) = Σ_t idf(t) · tf·(k1+1) /
-    * (tf + k1·(1 − b + b·doclen/avgLen)), with the standard
-    * idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5)).
-    *
-    * Execution: per-term document frequencies come from one tiny
-    * aggregate over the term-filtered postings (collected — it is at
-    * most |query| rows), the (term, idf) table broadcasts into the
-    * postings join, and the per-doc sum is a single shuffle keyed by id.
-    * Top-k is TakeOrderedAndProject. Returns `(id, bm25_rank)` rows
-    * joined back to `data`, best first; ties rank by id. (Like
-    * `topTermsPerDoc`, ranks of 1-ulp-close scores assume consistent
-    * libm log across engines — the driver gate compares rank and id,
-    * never the float.) */
   /** Attach the corpus constants (`__nd` = nDocs as double, `__avg` =
-    * avg doc length) to the tiny per-term idf frame: plain literals when
-    * the index already materialized them (loaded/merged indexes — the
-    * pre-lazy plan shape, no extra join node), otherwise a one-row
-    * broadcast cross join of the lazy stats aggregate, so an in-memory
-    * build+search runs as ONE job with no eager stats pass. Values and
-    * ops are IEEE-identical on both paths — scores bit-match. */
+    * avg doc length) to `df`: plain literals when the index already
+    * materialized them (loaded/merged indexes — no extra join node),
+    * otherwise a one-row broadcast cross join of the lazy stats
+    * aggregate, so an in-memory build+search needs no eager stats pass.
+    * Values and ops are IEEE-identical on both paths — scores
+    * bit-match. */
   private def withBm25Consts(index: Bm25Index, df: DataFrame): DataFrame =
     index.promotedConsts match {
       case Some((nd, av)) =>
@@ -851,6 +840,38 @@ object Search {
           col("avg_len").as("__avg"))))
     }
 
+  /** True when the planner's size estimate of `df` fits one scan split
+    * (`spark.sql.files.maxPartitionBytes`): one task then reads it as
+    * fast as a parallel stage would, and coalescing to that one task
+    * saves the exchanges a parallel plan needs. */
+  private def fitsOneSplit(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+
+  /** Okapi BM25 top-k: score(d, q) = Σ_t idf(t) · tf·(k1+1) /
+    * (tf + k1·(1 − b + b·doclen/avgLen)), with the standard
+    * idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5)).
+    *
+    * Execution: a scoring stage and a fetch stage. The scoring stage
+    * reads the term-filtered (and tombstone-masked) postings once: a
+    * `count` window partitioned by word gives each term's df on the same
+    * rows, the per-doc sum adds the contributions, and
+    * TakeOrderedAndProject keeps the best k, numbered in their sorted
+    * order (no global Window). When the planner's size estimate of the
+    * filtered postings fits one scan split, the whole stage runs in one
+    * task with no exchange — the contributions then sum in word order;
+    * above it the scan stays parallel (the word-bucketed serving table
+    * needs no exchange for the window) and the per-doc sum shuffles by
+    * id. The fetch stage broadcasts the k ranked ids into a scan of
+    * `data` and sorts the k rows within one partition, no range sort.
+    * A collect of a saved artifact's search runs 2 Spark jobs (the
+    * scoring stage's broadcast and the fetch), 3 once tombstones exist
+    * (their broadcast); the parallel path adds the id shuffle's job.
+    *
+    * Returns `(id, bm25_rank)` rows joined back to `data`, best first;
+    * ties rank by id. (Like `topTermsPerDoc`, ranks of 1-ulp-close
+    * scores assume consistent libm log across engines — the driver gate
+    * compares rank and id, never the float.) */
   def searchBm25(data: DataFrame, index: Bm25Index, idCol: String,
       query: String, k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, "k must be positive")
@@ -859,35 +880,31 @@ object Search {
     // Term filter ahead of everything: it reaches the scan — parquet
     // row-group/dictionary pushdown, and bucket pruning to |terms|
     // buckets when the postings are the word-bucketed serving table.
-    // Per-term document frequencies and idf are computed IN-PLAN from
-    // the same pruned scan and broadcast back in (a term absent from the
-    // corpus has no postings rows, so its idf value is irrelevant) — the
-    // whole serving query is one Spark job, no driver-side df collect.
     val filtered = index.postings.filter(col("word").isin(terms: _*))
-    // corpus constants ride the plan as a one-row cross join into the
-    // (tiny, per-term) idf frame — same IEEE values and ops as the old
-    // lit()s, so scores are bit-identical; an in-memory build+search is
-    // now one job with no eager stats pass (see Bm25Index)
-    val termIdf = withBm25Consts(index,
-        filtered.groupBy(col("word"))
-          .agg(count(lit(1)).cast("double").as("__df")))
-      .withColumn("__idf",
-        log(lit(1.0) + (col("__nd") - col("__df") + 0.5) / (col("__df") + 0.5)))
-      .select(col("word"), col("__idf"), col("__avg"))
-    val scored = filtered.join(broadcast(termIdf), "word")
+    val postings = if (fitsOneSplit(filtered)) filtered.coalesce(1) else filtered
+    // df = the term's row count in the same scan (a term absent from the
+    // corpus has no rows, so its idf never matters)
+    val scored = withBm25Consts(index, postings)
+      .withColumn("__df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("word")))
+        .cast("double"))
       .withColumn("__contrib",
-        col("__idf") * (col("tf") * (k1 + 1.0)) /
+        log(lit(1.0) + (col("__nd") - col("__df") + 0.5) / (col("__df") + 0.5)) *
+          (col("tf") * (k1 + 1.0)) /
           (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("doclen") / col("__avg"))))
       .groupBy(col(idCol)).agg(sum(col("__contrib")).as("__bm25"))
+    // TakeOrderedAndProject leaves the k survivors sorted in ONE
+    // partition, so their position in it is the rank
     val top = scored.orderBy(col("__bm25").desc, col(idCol).asc).limit(k)
-    // rank the k survivors (tiny frame — the window's single partition
-    // holds exactly k rows, not the corpus)
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__bm25").desc, col(idCol).asc)
-    top.withColumn("bm25_rank", row_number().over(w))
-      .join(data, Seq(idCol))
+      .select(col(idCol),
+        (monotonically_increasing_id() + 1).cast("int").as("bm25_rank"))
+    val fetched = broadcast(top).join(data, Seq(idCol))
       .select((data.columns.map(col) :+ col("bm25_rank")): _*)
-      .orderBy(col("bm25_rank"))
+    // the k rows meet in one partition: in the scan's own task when
+    // `data` fits one split, else through a single-partition exchange of
+    // the joined rows (a parallel scan of a large corpus stays parallel)
+    (if (fitsOneSplit(data)) fetched.coalesce(1) else fetched.repartition(1))
+      .sortWithinPartitions(col("bm25_rank"))
   }
 
   /** BATCH retrieval: score MANY queries against the index in ONE
@@ -925,8 +942,8 @@ object Search {
     val words = qterms.select(col("word")).distinct()
     val filtered = index.postings
       .join(broadcast(words), Seq("word"), "left_semi")
-    // one-row corpus constants into the per-term idf frame — the
-    // single-query path's idiom, bit-identical values (see searchBm25)
+    // one-row corpus constants into the per-term idf frame: the values
+    // and idf arithmetic of searchBm25, so idf is bit-identical
     val termIdf = withBm25Consts(index,
         filtered.groupBy(col("word"))
           .agg(count(lit(1)).cast("double").as("__df")))

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *  - DELETE is O(delta): the requested ids append into the artifact's
   *    `<table>_deleted` sibling — one small-table commit, the base
   *    files stay byte-immutable (the same invariant every upsert path
-  *    pins). Re-deleting an id is harmless: every consumer
-  *    deduplicates the tombstone set by id before use.
+  *    pins). Re-deleting an id is harmless: the serve-side anti-join
+  *    ignores duplicate keys, and the stats correction deduplicates.
   *  - SERVE-time masking is a broadcast anti-join: tombstone sets are
   *    tiny relative to the corpus (takedowns are requests, not
   *    ingest), so the filter is map-side against every serve path —
@@ -110,15 +110,18 @@ private[graft] object Tombstones {
   }
 
   /** Mask `df` against the artifact's tombstones: a broadcast LEFT
-    * ANTI join on the tombstone set's own id column (deduplicated —
-    * re-deletes collapse). Identity when no tombstones exist, so
-    * undeleted artifacts keep their exact previous plans. */
+    * ANTI join on the tombstone set's own id column. A re-deleted id
+    * needs no dedup (an anti join ignores duplicate build keys), so the
+    * mask adds only the broadcast's scan to the plan — no exchange.
+    * Identity when no tombstones exist, so undeleted artifacts keep
+    * their exact previous plans. */
   def mask(spark: SparkSession, artifact: String, df: DataFrame): DataFrame =
-    read(spark, artifact).map { tomb =>
-      val id = tomb.columns.head
-      df.join(broadcast(tomb.select(col(id)).dropDuplicates(id)),
-        Seq(id), "left_anti")
-    }.getOrElse(df)
+    read(spark, artifact).map(antiJoin(df, _)).getOrElse(df)
+
+  private def antiJoin(df: DataFrame, tomb: DataFrame): DataFrame = {
+    val id = tomb.columns.head
+    df.join(broadcast(tomb.select(col(id))), Seq(id), "left_anti")
+  }
 
   /** The tombstone sibling's data files at this instant — the reclaim
     * SNAPSHOT a staged build records in its basis: the rewrite filters
@@ -134,13 +137,7 @@ private[graft] object Tombstones {
     * the staged-rewrite flavor of [[mask]]. */
   def maskByFiles(spark: SparkSession, df: DataFrame,
       files: Seq[String]): DataFrame =
-    if (files.isEmpty) df
-    else {
-      val tomb = spark.read.parquet(files: _*)
-      val id = tomb.columns.head
-      df.join(broadcast(tomb.select(col(id)).dropDuplicates(id)),
-        Seq(id), "left_anti")
-    }
+    if (files.isEmpty) df else antiJoin(df, spark.read.parquet(files: _*))
 
   /** Retire the snapshot a reclaiming promote consumed: keep only the
     * sibling's files NOT in `consumed`. Post-swap, crash-safe (see

@@ -70,17 +70,17 @@ object AuditPlans {
     "q_fingerprint" -> 1, "q_fixedwidth" -> 1, "q_format" -> 1,
     "q_frame_sample" -> 2, "q_gopher_rules" -> 1, "q_groupby_runs" -> 5,
     "q_groupby_summaries" -> 2, "q_heavy_hitters" -> 3,
-    // rrf: the BM25 side's 6 (the q_search_bm25 shape) + the fused
-    // id-keyed aggregate; every fused frame is top-N-bounded.
-    // borda 1 → 9: its list sizes are in-plan count windows now, not a
-    // localCheckpoint + count per list, so the same two retriever
-    // pipelines as rrf sit inside the audited plan — rrf's 9
-    // (plans/r18/q_hybrid_borda_*)
-    "q_hybrid_rrf" -> 9, "q_hybrid_borda" -> 9,
-    // eval: retriever lists are checkpoint-pinned; the fused aggregate,
-    // three bounded qrels-hit aggregates, and the ideal-DCG TakeOrdered
-    // account for the budget
-    "q_rank_eval" -> 5,
+    // rrf and borda: the BM25 side's 4 (the q_search_bm25 shape); both
+    // fused lists leave their retrievers in one partition, so the fused
+    // id-keyed aggregate needs no exchange; every fused frame is
+    // top-N-bounded. 9 → 4 when searchBm25 dropped its range sort and
+    // the top-k's shuffles (plans/r19/q_hybrid_{rrf,borda}_*)
+    "q_hybrid_rrf" -> 4, "q_hybrid_borda" -> 4,
+    // eval: retriever lists are checkpoint-pinned; three bounded
+    // qrels-hit aggregates and the ideal-DCG TakeOrdered account for
+    // the budget. 5 → 4: the fused aggregate over the two one-partition
+    // lists lost its exchange (plans/r19/q_rank_eval_*)
+    "q_rank_eval" -> 4,
     // batch retrieval: the single-query shape + the workload-sized
     // qterms/words distincts and the (query, doc)-keyed score aggregate;
     // the ranking window partitions BY QUERY (no global exchange beyond
@@ -229,32 +229,49 @@ object AuditPlans {
     "q_pivot_counts" -> 3, "q_pivot_sum" -> 3, "q_pivot_totals" -> 2,
     "q_profile" -> 2, "q_quality_score" -> 1, "q_quantile_band" -> 2,
     "q_rank" -> 1, "q_repetition" -> 1, "q_rollup" -> 2,
-    "q_sample_stratified" -> 2, "q_search_bm25" -> 8,
-    "q_search_bm25_serve" -> 2, "q_search_bm25_upsert" -> 2,
-    "q_search_bm25_compact" -> 2, "q_search_bm25_catchup" -> 2,
-    // delete: serve shape + the tombstone-set dedup aggregate feeding
-    // the broadcast anti-join (tiny: the takedown set, never the corpus)
-    "q_search_bm25_delete" -> 3,
-    // segment-resident delete: the masked-serve shape over base ∪
-    // segment postings + the segment-side union's extra aggregate leg
-    "q_search_bm25_delete_seg" -> 4,
-    // the e2e composition: the post-reclaim mask-free serve (2) + the
+    "q_sample_stratified" -> 2,
+    // in-memory index: the postings build's (id, doclen, word) aggregate
+    // and the lazy stats aggregate (partial/final each); the search
+    // itself runs in one partition, so it adds none (8 → 4,
+    // plans/r19/q_search_bm25_*)
+    "q_search_bm25" -> 4,
+    // saved-artifact serves: the term-filtered postings fit one scan
+    // split, so df window, per-doc sum and top-k run in the scan's task
+    // and the fetch sorts within one partition — no exchange (2 → 0,
+    // plans/r19/q_search_bm25_{serve,upsert,compact,catchup}_*)
+    "q_search_bm25_serve" -> 0, "q_search_bm25_upsert" -> 0,
+    "q_search_bm25_compact" -> 0, "q_search_bm25_catchup" -> 0,
+    // delete: the serve shape behind the broadcast tombstone anti-join,
+    // which dedups nothing (3 → 0, plans/r19/q_search_bm25_delete_*)
+    "q_search_bm25_delete" -> 0,
+    // segment-resident delete: the masked serve over base ∪ segment
+    // postings, coalesced like the base (4 → 0,
+    // plans/r19/q_search_bm25_delete_seg_*)
+    "q_search_bm25_delete_seg" -> 0,
+    // the e2e composition: the post-reclaim mask-free serve (0) + the
     // admitted-segment suppression aggregate + the raw-file erasure
-    // aggregate + output ORDER BY; both gate joins are one-row broadcasts
-    "q_takedown_e2e" -> 5,
+    // aggregate (partial/final); both gate joins are one-row broadcasts,
+    // and the output ORDER BY of one-row joins over the one-partition
+    // serve needs no exchange (5 → 3, plans/r19/q_takedown_e2e_*)
+    "q_takedown_e2e" -> 3,
     // corpus erasure: per-source agg (partial/final) over the served
     // table + the raw-file erasure aggregate's single-partition leg +
     // output ORDER BY folded into the final exchange
     "q_corpus_erase" -> 3,
-    // the corpus-erase e2e composition: the rebuilt-index BM25 serve
-    // shape (2) + the three one-row gate aggregates' single-partition
-    // legs (corpus-file erasure, index-file erasure, suppression) +
-    // output ORDER BY
-    "q_corpus_erase_e2e" -> 6,
+    // the corpus-erase e2e composition: the rebuilt-index BM25 serve's
+    // single-partition gather of its joined rows (the partitioned corpus
+    // table carries no size estimate, so its fetch stays parallel) + the
+    // three one-row gate aggregates' single-partition legs (corpus-file
+    // erasure, index-file erasure, suppression) + the fingerprint-keyed
+    // aggregate leg; the output ORDER BY sorts within the serve's one
+    // partition (6 → 5, plans/r19/q_corpus_erase_e2e_*)
+    "q_corpus_erase_e2e" -> 5,
     // reclaim: tombstones consumed at compaction — the serve plan is
-    // mask-free again, back to the base serve shape
-    "q_search_bm25_reclaim" -> 2,
-    "q_stream_bm25_ingest" -> 3, "q_search_minscore" -> 4,
+    // mask-free again, back to the base serve shape (2 → 0)
+    "q_search_bm25_reclaim" -> 0,
+    // streaming-ingested segments served beside the base: the base
+    // serve shape (3 → 0, plans/r19/q_stream_bm25_ingest_*)
+    "q_stream_bm25_ingest" -> 0, "q_search_minscore" -> 4,
     "q_search_scored" -> 4, "q_select_computed" -> 1,
     "q_session_window" -> 2, "q_shuffle" -> 1, "q_sim_ivf" -> 0, "q_sim_ivf_serve" -> 0,
     "q_sim_lsh" -> 1, "q_sim_lsh_serve" -> 1,
@@ -311,11 +328,11 @@ object AuditPlans {
   /** BNLJs that are part of the design, with why they are scale-safe. */
   val expectedBnlj: Map[String, String] = Map(
     "q_search_bm25" ->
-      "corpus-constants join: build side is exactly ONE broadcast row (the in-memory index's lazy stats aggregate) crossed onto the per-term idf frame, which is bounded by the query's terms",
+      "corpus-constants join: build side is exactly ONE broadcast row (the in-memory index's lazy stats aggregate) crossed onto the term-filtered postings, a map-side column append per posting",
     "q_hybrid_rrf" ->
-      "corpus-constants join (q_search_bm25's shape, on the lexical retriever): ONE broadcast stats row onto the term-bounded idf frame",
+      "corpus-constants join (q_search_bm25's shape, on the lexical retriever): ONE broadcast stats row crossed onto the term-filtered postings",
     "q_hybrid_borda" ->
-      "corpus-constants join (q_search_bm25's shape, on the lexical retriever): ONE broadcast stats row onto the term-bounded idf frame",
+      "corpus-constants join (q_search_bm25's shape, on the lexical retriever): ONE broadcast stats row crossed onto the term-filtered postings",
     "q_search_bm25_batch" ->
       "corpus-constants join: build side is exactly ONE broadcast row (the in-memory index's lazy stats aggregate) crossed onto the per-term idf frame, which is bounded by the query workload's distinct terms",
     "q_rank_eval_batch" ->
@@ -372,34 +389,12 @@ object AuditPlans {
   /** Unpartitioned windows that are part of the design, with why their
     * single partition is bounded (never the corpus). */
   val expectedGlobalWindow: Map[String, String] = Map(
-    "q_search_bm25" ->
-      "bm25_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
-    "q_search_bm25_serve" ->
-      "bm25_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
-    "q_search_bm25_upsert" ->
-      "bm25_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
-    "q_search_bm25_compact" ->
-      "bm25_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
-    "q_search_bm25_catchup" ->
-      "bm25_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
-    "q_stream_bm25_ingest" ->
-      "bm25_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
-    "q_search_bm25_delete" ->
-      "bm25_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
-    "q_search_bm25_reclaim" ->
-      "bm25_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
-    "q_search_bm25_delete_seg" ->
-      "bm25_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
-    "q_takedown_e2e" ->
-      "bm25_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
-    "q_corpus_erase_e2e" ->
-      "bm25_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
     "q_weighted_sample" ->
       "sample_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
     "q_hybrid_rrf" ->
-      "all three windows rank top-N-bounded frames (bm25_rank and the cosine rank after .limit(50), rrf_rank after .limit(25)) — the searchBm25 k-row idiom",
+      "both windows rank top-N-bounded frames: the cosine rank after .limit(50), rrf_rank after .limit(25)",
     "q_hybrid_borda" ->
-      "every window ranks or counts a top-N-bounded frame: bm25_rank and the cosine rank after .limit(50), each list's in-plan size count over that top-50 list (Fusion.borda's input contract), borda_rank after .limit(25)",
+      "every window ranks or counts a top-N-bounded frame: the cosine rank after .limit(50), each list's in-plan size count over that top-50 list (Fusion.borda's input contract), borda_rank after .limit(25)",
     "q_rank_eval" ->
       "both windows rank bounded frames: the ideal-DCG window AFTER .limit(k) over qrels, rrf_rank after .limit(25); the retriever lists are localCheckpoint-pinned",
     "q_rank_eval_takedown" ->

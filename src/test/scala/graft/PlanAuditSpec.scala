@@ -16,21 +16,18 @@ class PlanAuditSpec extends SparkSpec {
       AuditPlans.sweep(spark, "/root/testdata/sf0.001")
     }
     assert(rows.nonEmpty)
-    val bad = rows.filter(_.unexplained)
-    assert(bad.isEmpty, bad.map(r =>
+    // every check below reports into ONE failure message, so a single
+    // run shows every stale pin at once
+    val bad = rows.filter(_.unexplained).map(r =>
       s"${r.name}: flags=${r.flags.mkString(",")} err=${r.error.getOrElse("")}")
-      .mkString("\n"))
     // whitelist hygiene: every whitelisted query still plans the flagged
     // shape — stale entries would mask a future regression under an old
     // excuse
     val flagged = rows.filter(_.flags.exists(_.startsWith("BNLJ"))).map(_.name).toSet
     val stale = AuditPlans.expectedBnlj.keySet -- flagged
-    assert(stale.isEmpty, s"whitelisted BNLJs no longer planned: $stale")
     val gwFlagged =
       rows.filter(_.flags.exists(_.startsWith("GLOBAL-WINDOW"))).map(_.name).toSet
     val gwStale = AuditPlans.expectedGlobalWindow.keySet -- gwFlagged
-    assert(gwStale.isEmpty,
-      s"whitelisted global windows no longer planned: $gwStale")
     // shuffle budget: each query's exchange count is pinned — an extra
     // Exchange is a scale regression that row counts won't catch; a
     // missing one is a plan change that deserves a deliberate pin update
@@ -43,6 +40,10 @@ class PlanAuditSpec extends SparkSpec {
           "(add it to AuditPlans.expectedShuffles with the plan in hand)")
       }
     }
-    assert(drift.isEmpty, drift.mkString("\n"))
+    val problems = bad ++
+      stale.toSeq.sorted.map(n => s"$n: whitelisted BNLJ no longer planned") ++
+      gwStale.toSeq.sorted.map(n => s"$n: whitelisted global window no longer planned") ++
+      drift
+    assert(problems.isEmpty, problems.mkString("\n"))
   }
 }

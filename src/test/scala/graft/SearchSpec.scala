@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Search
 import graft.sources.Sources
 import graft.sources.Sources.Transform
+import graft.tools.AuditPlans
 
 /** Full search-scoring goldens from the reference
   * (unit_tests.py:3330-3420 recipes fixture). Tie order: the reference's
@@ -294,5 +295,80 @@ class SearchSpec extends SparkSpec {
       "dedupExact compaction did not restore the rebuild content")
     assert(healed.nDocs == full.nDocs && healed.totalLen == full.totalLen &&
       healed.avgLen == full.avgLen)
+  }
+
+  /** The Spark jobs `body` starts, counted exactly: the listener bus is
+    * drained before the listener joins and again before it is read. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("searchBm25 on a saved artifact: <=2 Spark jobs, <=3 with " +
+      "tombstones, no global window; exact ties rank by id; the parallel " +
+      "path ranks like the one-partition path") {
+    import spark.implicits._
+    // three byte-identical documents score bit-identically
+    val tied = Seq(900003L, 900001L, 900002L)
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), col("text"))
+      .unionByName(tied.map(_ -> "hash join zebra").toDF("doc_id", "text"))
+    val table = "bm25_spec_serve"
+    Seq(table, s"${table}_stats", s"${table}_deleted").foreach(
+      graft.sources.Sources.replaceTable(spark, _))
+    Search.saveBm25Index(Search.buildBm25Index(docs, "doc_id", "text"),
+      table, buckets = 8)
+    val queries = Seq("hash join zebra", "hash join filter", "sort")
+    def search(q: String) =
+      Search.searchBm25(docs, Search.loadBm25Index(spark, table), "doc_id",
+        q, k = 10)
+    def ranked(q: String): (Seq[(Long, Int)], Int) = {
+      val df = search(q)
+      jobsDuring(df.select("doc_id", "bm25_rank").collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSeq)
+    }
+    def staticPlan(q: String) =
+      withConf("spark.sql.adaptive.enabled" -> "false") {
+        search(q).queryExecution.executedPlan
+      }
+    val onePart = queries.map { q =>
+      val (rows, jobs) = ranked(q)
+      assert(jobs <= 2, s"'$q' ran $jobs jobs")
+      assert(rows.map(_._2) == (1 to rows.size), s"'$q' ranks: $rows")
+      q -> rows
+    }.toMap
+    assert(onePart("hash join zebra").take(3) == tied.sorted.zip(1 to 3),
+      s"exact ties must rank by id: ${onePart("hash join zebra")}")
+    val plan = staticPlan("hash join filter")
+    assert(AuditPlans.countShuffles(plan) == 0 &&
+      AuditPlans.countGlobalWindows(plan) == 0, plan.toString)
+
+    Search.deleteBm25Docs(spark, table, Seq(900002L).toDF("doc_id"))
+    val (afterDelete, jobs) = ranked("hash join zebra")
+    assert(jobs <= 3, s"masked search ran $jobs jobs")
+    assert(afterDelete.take(2) == Seq(900001L -> 1, 900003L -> 2),
+      s"tombstoned tie still served or ranks moved: $afterDelete")
+
+    // a scan split below the postings' size forces the parallel path
+    // (per-id shuffle, parallel fetch): same ids, same ranks
+    val masked = queries.map(q => q -> ranked(q)._1).toMap
+    withConf("spark.sql.files.maxPartitionBytes" -> "16384") {
+      assert(AuditPlans.countShuffles(staticPlan("hash join filter")) > 0,
+        "the small split did not select the parallel path")
+      queries.foreach(q => assert(ranked(q)._1 == masked(q),
+        s"parallel path diverged on '$q'"))
+    }
   }
 }

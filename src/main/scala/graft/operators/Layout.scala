@@ -271,6 +271,12 @@ object Layout {
       graft.sources.Sources.replaceTable(spark, table)
       df.write.mode("overwrite").format("parquet")
         .partitionBy(partitionCols: _*).saveAsTable(table)
+      // a partitioned catalog table carries no size estimate until it
+      // is analyzed, and the planner then takes spark.sql
+      // .defaultSizeInBytes (huge) in every size-based choice
+      // (broadcast, one-split fetch); NOSCAN records the file sizes only
+      spark.sql("ANALYZE TABLE " + spark.sessionState.sqlParser
+        .parseTableIdentifier(table).quotedString + " COMPUTE STATISTICS NOSCAN")
     }
     spark.table(table)
   }
@@ -951,11 +957,14 @@ object Layout {
       beforePromote: () => Unit,
       afterRacedCheck: () => Unit = () => ()): Long = {
     val idCol = ids.columns.head
-    val doomed = broadcast(ids.select(col(idCol)).dropDuplicates(idCol))
+    val doomedIds = ids.select(col(idCol)).dropDuplicates(idCol)
+    // the broadcast hint belongs on the semi- and anti-joins only: on
+    // the digest's aggregate it reaches no join and logs a hint error
+    val doomed = broadcast(doomedIds)
     // lazy for the same reason as the partitioned path: the no-match
     // no-fence call (the noop floor the scale ladder prices) must not
     // pay the doomed-set digest aggregate
-    lazy val digest = idsDigest(doomed, idCol)
+    lazy val digest = idsDigest(doomedIds, idCol)
     val full = spark.table(table)
     val loc = tableLocation(spark, table)
     val fs = new org.apache.hadoop.fs.Path(loc)

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery}
 import scala.util.control.NonFatal
 
 /** Event projection for the custom-state operator. */
@@ -161,11 +162,13 @@ object Streaming {
     * mode, processAllAvailable).
     *
     * Harness economics (this is a synchronous run-to-completion wrapper,
-    * not a long-lived production query):
-    *   - shuffle partitions are capped for the stateful operators —
-    *     parallelism is pinned at query start and each partition opens
-    *     its own state store; on a cluster this is the knob that decides
-    *     state-store count for the life of the checkpoint.
+    * not a long-lived production query), the two confs set for the
+    * start only, through [[withStartConf]]:
+    *   - shuffle partitions are capped for the stateful operators
+    *     ([[cappedParts]]) — parallelism is pinned at query start and
+    *     each partition opens its own state store; on a cluster this is
+    *     the knob that decides state-store count for the life of the
+    *     checkpoint.
     *   - no-data micro-batches are disabled for the run: all data
     *     arrives in batch 0, so the extra watermark-advancement batch
     *     re-commits identical state/output and only costs time. (A
@@ -173,40 +176,24 @@ object Streaming {
     *     windows at the tail; here the query ends after the data batch
     *     and the sink table is already final for complete/update/dedup
     *     shapes.)
-    *   - the checkpoint goes to tmpfs (/dev/shm) when available and is
-    *     deleted after the run: a to-completion run's checkpoint is
-    *     ephemeral by construction. Long-lived queries should use
-    *     writeStream directly with a durable checkpointLocation.
+    *   - the checkpoint is ephemeral ([[startSink]] without a caller
+    *     checkpoint: tmpfs when available, deleted on stop). Long-lived
+    *     queries should use writeStream directly with a durable
+    *     checkpointLocation.
     */
   def runToBatch(agg: DataFrame, name: String, mode: String = "complete",
       watermarkFlush: Boolean = false): DataFrame = {
     val spark = agg.sparkSession
-    val partsKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevParts = spark.conf.get(partsKey)
-    val prevNoData = spark.conf.get(noDataKey)
-    val target = sys.props.getOrElse("graft.stream.partitions", "8").toInt
-    val ckpt = ephemeralCkpt(name)
-    val q = try {
-      spark.conf.set(partsKey, math.min(prevParts.toInt, target))
-      // append-mode WINDOW aggregates only emit a closed window in a
-      // batch AFTER the one that advanced the watermark past it — with
-      // no-data batches off, a to-completion run would emit NOTHING.
-      // watermarkFlush keeps them on so the flush batch runs; for
-      // complete/update/dedup shapes the data batch is already final
-      // and the extra batch only costs time (see the scaladoc above)
-      spark.conf.set(noDataKey, watermarkFlush.toString)
-      val w = agg.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(name)
-      ckpt.fold(w)(c => w.option("checkpointLocation", c.dir.toString)).start()
-    } catch {
-      case NonFatal(e) => ckpt.foreach(_.release()); throw e
-    } finally {
-      spark.conf.set(partsKey, prevParts)
-      spark.conf.set(noDataKey, prevNoData)
-    }
+    // append-mode WINDOW aggregates only emit a closed window in a
+    // batch AFTER the one that advanced the watermark past it — with
+    // no-data batches off, a to-completion run would emit NOTHING.
+    // watermarkFlush keeps them on so the flush batch runs; for
+    // complete/update/dedup shapes the data batch is already final
+    // and the extra batch only costs time (see the scaladoc above)
+    val q = startSink(spark,
+      agg.writeStream.outputMode(mode).format("memory").queryName(name),
+      None, name,
+      Seq(partsKey -> cappedParts(spark), noDataKey -> watermarkFlush.toString))
     try {
       q.processAllAvailable()
       if (watermarkFlush) {
@@ -239,58 +226,49 @@ object Streaming {
           cur = spark.table(name).count()
         }
       }
-      q.stop()
-    } finally {
-      try { if (q.isActive) q.stop() }
-      finally ckpt.foreach(_.release())
-    }
+    } finally q.stop()
     spark.table(name)
   }
 
-  /** Start a sink query under the same stateful-stage economics
-    * [[runToBatch]] documents (shared by every synchronous sink gate):
-    *
-    *   - shuffle partitions — captured by the query (cloned session) at
-    *     start and pinning state-store count for the life of the
-    *     checkpoint — are capped at `graft.stream.partitions`
-    *     (default 8): each stateful-stage partition opens, commits and
-    *     changelog-uploads its OWN RocksDB instance per micro-batch, a
-    *     per-instance cost that dwarfs the per-row work for
-    *     harness-sized batches (measured: the ingest-curation dedup
-    *     stage at 32 partitions bills ~25 task-seconds against ~0.2 MB
-    *     of state). A deployment sets -Dgraft.stream.partitions to its
-    *     state-sizing choice (state bytes / target bytes per store) —
-    *     the knob is the same one runToBatch has always honored.
-    *   - no-data micro-batches are disabled: every sink family emits
-    *     its surviving rows in the data batch itself
-    *     (dropDuplicatesWithinWatermark filters on arrival; the
-    *     stateless segment sinks have no watermark at all), so the
-    *     extra watermark-advancement batch would only re-open and
-    *     re-commit every state store to emit nothing. Long-lived
-    *     append-mode WINDOW aggregates (which do need the flush) run
-    *     through [[runToBatch]] with `watermarkFlush = true`, not
-    *     through the sinks.
-    *
-    * Both confs are restored immediately after start — the streaming
-    * query runs on a session CLONED at start time (its foreachBatch
-    * batch plans included), so the caller's session sees no change. */
-  private def startPinned(spark: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val partsKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevParts = spark.conf.get(partsKey)
-    val prevNoData = spark.conf.get(noDataKey)
-    try {
-      spark.conf.set(partsKey, math.min(prevParts.toInt,
-        sys.props.getOrElse("graft.stream.partitions", "8").toInt))
-      spark.conf.set(noDataKey, "false")
-      start
-    } finally {
-      spark.conf.set(partsKey, prevParts)
-      spark.conf.set(noDataKey, prevNoData)
+  private val partsKey = "spark.sql.shuffle.partitions"
+  private val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** The session's shuffle width capped at `graft.stream.partitions`
+    * (default 8): each stateful-stage partition opens, commits and
+    * changelog-uploads its OWN RocksDB instance per micro-batch, a cost
+    * that dwarfs the per-row work of harness-sized batches (the
+    * ingest-curation dedup stage at 32 partitions billed ~25
+    * task-seconds against ~0.2 MB of state). Ephemeral starts only: a
+    * durable checkpoint pins its width for life, and that stays the
+    * deployment's state-sizing choice. */
+  private def cappedParts(spark: SparkSession): String =
+    math.min(spark.conf.get(partsKey).toInt,
+      sys.props.getOrElse("graft.stream.partitions", "8").toInt).toString
+
+  private val startLock = new Object
+
+  /** The one conf scope of every stream start here: set `confs` on the
+    * caller's session, `start`, restore each key (unset if it was
+    * unset). The query runs on a session CLONED inside `start()`, so it
+    * keeps the scoped values and the caller's session sees no change.
+    * One (reentrant) lock spans set → start → restore, and every start
+    * takes it, even one that sets nothing: unlocked, two windows restore
+    * each other's scoped values for good, and a start inside another's
+    * window clones, and pins, that window's width. `confs` is evaluated
+    * under the lock, so [[cappedParts]] reads the caller's own width. */
+  private def withStartConf[T](spark: SparkSession,
+      confs: => Seq[(String, String)])(start: => T): T =
+    startLock.synchronized {
+      val scoped = confs
+      val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+        start
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
-  }
 
   /** Ephemeral checkpoint placement for a sink started WITHOUT a caller
     * checkpoint (the synchronous to-completion gates) and for
@@ -398,22 +376,27 @@ object Streaming {
     }
   }
 
-  /** Start with an ephemeral tmpfs checkpoint (deleted on stop) when the
-    * caller provided none; durable checkpoints pass through verbatim. */
-  private def startWithCkpt(checkpoint: Option[String], name: String)(
-      start: Option[String] => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    checkpoint match {
-      case some @ Some(_) => start(some)
-      case None =>
-        ephemeralCkpt(name) match {
-          case Some(ckpt) =>
-            val q = try start(Some(ckpt.dir.toString)) catch {
-              case NonFatal(e) => ckpt.release(); throw e
-            }
-            withCleanup(q, ckpt)
-          case None => start(None)
-        }
+  /** Start `w` in [[withStartConf]] with `confs`, on an ephemeral tmpfs
+    * checkpoint (deleted on stop) when the caller provided none; durable
+    * checkpoints pass through verbatim. */
+  private def startSink(spark: SparkSession, w: DataStreamWriter[Row],
+      checkpoint: Option[String], name: String,
+      confs: => Seq[(String, String)] = Nil): StreamingQuery =
+    withStartConf(spark, confs) {
+      def start(c: Option[String]) =
+        c.fold(w)(w.option("checkpointLocation", _)).start()
+      checkpoint match {
+        case some @ Some(_) => start(some)
+        case None =>
+          ephemeralCkpt(name) match {
+            case Some(ckpt) =>
+              val q = try start(Some(ckpt.dir.toString)) catch {
+                case NonFatal(e) => ckpt.release(); throw e
+              }
+              withCleanup(q, ckpt)
+            case None => start(None)
+          }
+      }
     }
 
   /** Sliding-window aggregate with a watermark: per (window, event_type)
@@ -596,7 +579,20 @@ object Streaming {
     * keys, re-resolved per batch so a nightly compaction is picked up
     * for free). The curation predicates fold into the same codegen
     * stage. State is finite by the watermark horizon — the
-    * StateProbe-measured `keys × horizon × bytes/key` budget. */
+    * StateProbe-measured `keys × horizon × bytes/key` budget.
+    *
+    * One trigger per input batch: the start runs in [[withStartConf]]
+    * with no-data micro-batches off, durable or not. The dedup emits on
+    * arrival, so the watermark-only batch Spark would run after each
+    * data batch emits nothing and only re-commits every state store.
+    * State still expires: each data batch evicts with the watermark the
+    * previous one advanced (an idle stream holds expired keys until data
+    * comes). Restart-safe: the no-data conf is not among the confs a
+    * checkpoint's offset log pins (shuffle width, state-store settings,
+    * watermark policy), so a checkpoint resumes under either setting
+    * with the same state and plan. An ephemeral start also caps the
+    * state-store width ([[cappedParts]]); a durable one keeps the
+    * session's, which its checkpoint pins for life. */
   def ingestCurationSink(stream: DataFrame, corpus: DataFrame,
       textCol: String, tsCol: String, outDir: String,
       delay: String = "1 hour", minQuality: Double = 0.5,
@@ -611,21 +607,12 @@ object Streaming {
       .withColumn("n_tokens", TextAnalysis.tokenCount(col(textCol)).cast("long"))
       .filter(col("quality") > minQuality &&
         graft.operators.Scrub.encodingClean(col(textCol)))
-    // the one sink family whose STREAM plan is stateful (the watermark
-    // dedup) — an EPHEMERAL start (no caller checkpoint: the synchronous
-    // to-completion gates) runs under the runToBatch harness economics
-    // (capped state-store parallelism, no no-data flush batch); the
-    // stateless sinks keep the session's width for their foreachBatch
-    // joins. A DURABLE deployment passing its own checkpoint keeps the
-    // session's shuffle width too: the capped width would otherwise be
-    // silently pinned into the checkpoint for its lifetime — state-store
-    // parallelism there is the deployment's state-sizing choice
-    // (spark.sql.shuffle.partitions at first start), not a harness knob.
-    if (checkpoint.isEmpty)
-      startPinned(stream.sparkSession)(
-        segmentSink(curated, outDir, checkpoint, trigger = trigger)(identity))
-    else
-      segmentSink(curated, outDir, checkpoint, trigger = trigger)(identity)
+    // the one sink family whose STREAM plan is stateful: one trigger
+    // per input batch always, the capped width only when ephemeral
+    val spark = stream.sparkSession
+    withStartConf(spark, (noDataKey -> "false") +:
+        (if (checkpoint.isEmpty) Seq(partsKey -> cappedParts(spark)) else Nil))(
+      segmentSink(curated, outDir, checkpoint, trigger = trigger)(identity))
   }
 
   /** Streaming NEAR-duplicate ingest dedup against a static corpus — the
@@ -978,22 +965,25 @@ object Streaming {
             // concurrently so each job's task tail back-fills the others
             // (guide §2.6), EXCEPT the last projection: it is the
             // segment-completeness marker and must land only after every
-            // other subtree is fully written
+            // other subtree is fully written. Parts keep this thread's
+            // local properties (the streaming job group: stop() cancels
+            // them), and ALL are awaited before the first failure is
+            // rethrown, so a replay never races a sibling still writing
             if (tables > 1) {
-              import scala.concurrent.{Await, Future}
-              import scala.concurrent.ExecutionContext.Implicits.global
-              Await.result(
-                Future.sequence((0 until tables - 1).map(t =>
-                  Future(writeTable(t)))),
-                scala.concurrent.duration.Duration.Inf)
+              val pool = java.util.concurrent.Executors.newFixedThreadPool(tables - 1)
+              val session = pinned.sparkSession
+                .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+              try (0 until tables - 1).map(t => org.apache.spark.sql.execution
+                  .SQLExecution.withThreadLocalCaptured(session, pool)(writeTable(t)))
+                .flatMap(f => scala.util.Try(f.join()).failed.toOption)
+                .headOption.foreach(e => throw Option(e.getCause).getOrElse(e))
+              finally pool.shutdown()
             }
             writeTable(tables - 1)
           }
         } finally pinned.unpersist()
       }
-    val wt = trigger.fold(w)(w.trigger)
-    startWithCkpt(checkpoint, "ing")(c =>
-      c.fold(wt)(d => wt.option("checkpointLocation", d)).start())
+    startSink(spark, trigger.fold(w)(w.trigger), checkpoint, "ing")
   }
 
   /** Streaming SEARCH ingest — the BM25 artifact's live admission path,
@@ -1080,9 +1070,7 @@ object Streaming {
           }
         } finally pinned.unpersist()
       }
-    val wt = trigger.fold(w)(w.trigger)
-    startWithCkpt(checkpoint, "ing")(c =>
-      c.fold(wt)(d => wt.option("checkpointLocation", d)).start())
+    startSink(spark, trigger.fold(w)(w.trigger), checkpoint, "ing")
   }
 
   /** Shared idempotent-segment `foreachBatch` sink: `survivors(batch)`
@@ -1105,7 +1093,7 @@ object Streaming {
       (transform: DataFrame => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(stream.isStreaming, "segmentSink needs a streaming frame")
-    val w0 = stream.writeStream
+    val w = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val pinned = batch.persist()
@@ -1118,9 +1106,7 @@ object Streaming {
           }
         } finally pinned.unpersist()
       }
-    val w = trigger.fold(w0)(w0.trigger)
-    startWithCkpt(checkpoint, "seg")(c =>
-      c.fold(w)(d => w.option("checkpointLocation", d)).start())
+    startSink(stream.sparkSession, trigger.fold(w)(w.trigger), checkpoint, "seg")
   }
 
   /** Streaming APPROXIMATE DISTINCT per event-time window: per-window

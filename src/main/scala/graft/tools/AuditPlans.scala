@@ -258,14 +258,14 @@ object AuditPlans {
     // table + the raw-file erasure aggregate's single-partition leg +
     // output ORDER BY folded into the final exchange
     "q_corpus_erase" -> 3,
-    // the corpus-erase e2e composition: the rebuilt-index BM25 serve's
-    // single-partition gather of its joined rows (the partitioned corpus
-    // table carries no size estimate, so its fetch stays parallel) + the
-    // three one-row gate aggregates' single-partition legs (corpus-file
-    // erasure, index-file erasure, suppression) + the fingerprint-keyed
-    // aggregate leg; the output ORDER BY sorts within the serve's one
-    // partition (6 → 5, plans/r19/q_corpus_erase_e2e_*)
-    "q_corpus_erase_e2e" -> 5,
+    // the corpus-erase e2e composition: the three one-row gate
+    // aggregates' single-partition legs (corpus-file erasure, index-file
+    // erasure, suppression) + the fingerprint-keyed aggregate leg; the
+    // rebuilt-index BM25 serve coalesces its fetch (the partitioned
+    // corpus table is analyzed at build, so it fits one split) and the
+    // output ORDER BY sorts within the serve's one partition (6 → 5,
+    // plans/r19/q_corpus_erase_e2e_*; 5 → 4, plans/r20/q_corpus_erase_e2e_*)
+    "q_corpus_erase_e2e" -> 4,
     // reclaim: tombstones consumed at compaction — the serve plan is
     // mask-free again, back to the base serve shape (2 → 0)
     "q_search_bm25_reclaim" -> 0,

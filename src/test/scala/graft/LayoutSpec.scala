@@ -154,6 +154,10 @@ class LayoutSpec extends SparkSpec {
       "directories; scheme drift rebuilds") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val part = Layout.partitionedTableFor(docs, "layout_spec_part", "source")
+    // the build records the table's size: without statistics the planner
+    // takes spark.sql.defaultSizeInBytes (Long.MaxValue) for it
+    val size = part.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size < BigInt(1L << 30), s"no size estimate for the partitioned table: $size")
     val total = Layout.scanPruneStats(part)
     assert(total == Seq(Layout.PruneStat(20, false, false)), s"got $total")
     val pruned = part.filter(col("source").isin("src3", "src7"))

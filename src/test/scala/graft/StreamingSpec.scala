@@ -1443,6 +1443,158 @@ class StreamingSpec extends SparkSpec {
         s"expected ${expected.length}")
   }
 
+  /** Feeds `k` files of the documents table, one at a time, to a durable
+    * [[Streaming.ingestCurationSink]] (the `ingest_stream` shape: one
+    * `processAllAvailable` per offered file). File `i` carries every doc
+    * with `doc_id % k == i`, its event times in hour `i`, so with a
+    * 10-minute delay each file's watermark passes every earlier file's
+    * dedup keys. Returns the query's progress events and each file's
+    * distinct content digests. */
+  private def feedDurableCuration(tag: String, k: Int)
+      : (Seq[org.apache.spark.sql.streaming.StreamingQueryProgress], Seq[Set[String]]) = {
+    import graft.operators.Dedup
+    val root = java.nio.file.Files.createTempDirectory(s"graft-$tag-")
+    val feed = root.resolve("feed").toString
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val t0 = to_timestamp(lit("2024-03-01 00:00:00"))
+    def file(i: Int) = docs.filter(col("doc_id") % k === i)
+      .withColumn("ts", t0 + make_dt_interval(lit(0), lit(i),
+        lit(0), (col("doc_id") % 60).cast("decimal(18,6)")))
+    file(0).coalesce(1).write.parquet(feed)
+    val stream = spark.readStream
+      .schema("doc_id BIGINT, text STRING, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", "1").parquet(feed)
+    val q = Streaming.ingestCurationSink(stream,
+      docs.filter(col("doc_id") % 97 === 0), "text", "ts",
+      root.resolve("out").toString, delay = "10 minutes",
+      checkpoint = Some(root.resolve("ckpt").toString))
+    try {
+      q.processAllAvailable()
+      (1 until k).foreach { i =>
+        file(i).coalesce(1).write.mode("append").parquet(feed)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val digests = (0 until k).map(i => file(i)
+      .select(Dedup.contentKey(col("text"), normalize = false))
+      .collect().map(_.getString(0)).toSet)
+    (q.recentProgress.toSeq, digests)
+  }
+
+  test("ingestCurationSink durable: k offered files commit exactly k " +
+      "micro-batches — no watermark-only batch with 0 input rows") {
+    val k = 4
+    val (progress, _) = feedDurableCuration("ingest-1trig", k)
+    assert(progress.map(_.batchId) == (0L until k),
+      s"expected one batch per file, got batches ${progress.map(p =>
+        s"${p.batchId}:${p.numInputRows}").mkString(",")}")
+    assert(progress.forall(_.numInputRows > 0),
+      "a progress event with 0 input rows is a no-data batch")
+  }
+
+  test("ingestCurationSink durable: without the flush batch, dedup state " +
+      "still expires — numRowsTotal levels off at the last two files") {
+    val k = 5
+    val (progress, digests) = feedDurableCuration("ingest-expiry", k)
+    val rows = progress.map(_.stateOperators.map(_.numRowsTotal).sum)
+    assert(rows.length == k, s"state rows per batch: $rows")
+    // each data batch evicts with the watermark the previous one
+    // advanced: after batch i only files i-1 and i hold live keys
+    (1 until k).foreach(i => assert(rows(i) == (digests(i - 1) | digests(i)).size,
+      s"batch $i holds ${rows(i)} keys, expected files ${i - 1}..$i's " +
+        s"${(digests(i - 1) | digests(i)).size}: $rows"))
+    assert(rows.last < digests.reduce(_ | _).size, s"state never expired: $rows")
+  }
+
+  test("stream starts are serialized: two threads starting sinks at once " +
+      "on one session leave its shuffle width and no-data conf as they began") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    val root = java.nio.file.Files.createTempDirectory("graft-start-race-")
+    val in = root.resolve("in").toString
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), col("text"),
+        lit(java.sql.Timestamp.valueOf("2024-03-01 00:00:00")).as("ts"))
+    docs.coalesce(1).write.parquet(in)
+    // a width above the cap, so the ephemeral start really scopes it
+    withConf(keys.head -> "16") {
+      val began = keys.map(spark.conf.getOption)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try (1 to 5).foreach { round =>
+        val barrier = new java.util.concurrent.CyclicBarrier(2)
+        val starts = (0 until 2).map { t =>
+          pool.submit(new java.util.concurrent.Callable[
+              org.apache.spark.sql.streaming.StreamingQuery] {
+            def call() = {
+              val stream = spark.readStream.schema(docs.schema).parquet(in)
+              barrier.await()
+              // ephemeral starts: each scopes the width and the no-data conf
+              Streaming.ingestCurationSink(stream, docs.limit(1), "text", "ts",
+                root.resolve(s"out-$round-$t").toString)
+            }
+          })
+        }
+        starts.map(_.get()).foreach(_.stop())
+        assert(keys.map(spark.conf.getOption) == began,
+          s"round $round: session confs ${keys.map(spark.conf.getOption)} " +
+            s"!= $began after two concurrent starts")
+      } finally pool.shutdown()
+    }
+  }
+
+  test("lshIngestSink: a failed part write surfaces only after its " +
+      "sibling parts finish, in the streaming job group, and the " +
+      "completeness marker is never written") {
+    import graft.operators.Similarity
+    val root = java.nio.file.Files.createTempDirectory("graft-lsh-part-")
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val table = "lsh_stream_partfail"
+    (0 until 3).foreach(i =>
+      graft.sources.Sources.replaceTable(spark, s"${table}_t$i"))
+    Seq(s"${table}_meta", s"${table}_folded").foreach(
+      graft.sources.Sources.replaceTable(spark, _))
+    Similarity.saveLshIndex(emb.filter(col("vec_id") % 5 =!= 0), "embedding",
+      dims = 64, table, bits = 8, tables = 3)
+    val in = root.resolve("in").toString
+    emb.filter(col("vec_id") % 5 === 0).coalesce(1).write.parquet(in)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.partfail.impl", classOf[PartFailFs].getName)
+    val jobGroups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobGroups.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    val seg = root.resolve("seg")
+    try {
+      val q = Streaming.lshIngestSink(
+        spark.readStream.schema(emb.schema).parquet(in), table, "embedding",
+        s"partfail://$seg")
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+          q.processAllAvailable())
+        // checked the moment the failure surfaces: the slow sibling's
+        // job commit has already landed
+        assert(java.nio.file.Files.exists(seg.resolve("batch=0/t0/_SUCCESS")),
+          "the failure surfaced while sibling part t0 was still writing")
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(c => String.valueOf(c.getMessage).contains("injected part failure")),
+          s"unexpected failure: $e")
+      } finally q.stop()
+      assert(!java.nio.file.Files.exists(seg.resolve("batch=0/t2")),
+        "the completeness marker (last projection) was written after a failed part")
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      assert(jobGroups.size == 1 && jobGroups.contains(q.runId.toString),
+        s"part jobs ran outside the streaming job group ${q.runId}: $jobGroups")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      hconf.unset("fs.partfail.impl")
+    }
+  }
+
   test("lshIngestSink restart recovery + fold merge-commit crash: the " +
       "resume admits only new files; a ledgered segment that reappears " +
       "is skipped by serve and fold retry") {
@@ -1668,5 +1820,24 @@ class StreamingSpec extends SparkSpec {
       nearest_centroid_cos(col("embedding"), served.centroids)).count()
     assert(mismatches == 0,
       s"$mismatches resumed assignments disagree with the frozen centroids")
+  }
+}
+
+/** The local file system under the `partfail` scheme, for the
+  * lshIngestSink part-failure spec: creating any file of projection
+  * subtree `t1` fails, and the job commit of subtree `t0` (its
+  * `_SUCCESS`) is held back 1.5 s, so a sibling part is still writing
+  * when the failure happens. */
+class PartFailFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("partfail:///")
+  override def getScheme: String = "partfail"
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    val p = f.toUri.getPath
+    if (p.contains("/t1/")) throw new java.io.IOException(s"injected part failure: $f")
+    if (p.endsWith("/t0/_SUCCESS")) Thread.sleep(1500)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
 }

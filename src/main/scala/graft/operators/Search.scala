@@ -507,31 +507,27 @@ object Search {
   }
 
   /** Load the BM25 index over base table ∪ streaming-admitted segments
-    * ([[graft.streaming.Streaming.bm25IngestSink]]'s
-    * `batch=<id>/{postings,stats}` layout): segment postings are purely
-    * per-document, so base ∪ segments is content-identical to a rebuild
-    * over base ∪ admitted docs, and the corpus stats merge in long
-    * arithmetic (base (n, Σlen) + the sum over segment stats rows — one
-    * tiny aggregate job at load). A missing/empty segment dir serves the
-    * base alone (the subscribe-before-data shape). */
+    * ([[graft.streaming.Streaming.bm25IngestSink]]'s `postings` +
+    * `stats` parts): segment postings are purely per-document, so base ∪
+    * segments is content-identical to a rebuild over base ∪ admitted
+    * docs, and the corpus stats merge in long arithmetic (base (n, Σlen)
+    * + the sum over segment stats rows — one tiny aggregate job at
+    * load). Ledgered and incomplete segments are skipped
+    * ([[graft.operators.Segments]]; the ledger is the stats row's
+    * `folded_batches`). */
   def loadBm25IndexWithSegments(spark: org.apache.spark.sql.SparkSession,
       table: String, segDir: String): Bm25Index = {
     val base = loadBm25Index(spark, table)
-    val all = completeBm25SegmentDirs(spark, segDir)
-    if (all.isEmpty) base
+    // segments merge against the base's LONG stats; a pre-total_len
+    // base would fall back to loadBm25Index's round(avg·n)
+    // reconstruction, which is not guaranteed exact at large totals —
+    // the segment path hard-requires the mergeable schema like its
+    // upsert/fold siblings instead of silently degrading the
+    // content-identity contract
+    val segs = graft.operators.Segments.pending(spark, segDir, "stats")(
+      readMergeableStats(spark, table)._4.toSet)
+    if (segs.isEmpty) base
     else {
-      // segments merge against the base's LONG stats; a pre-total_len
-      // base would fall back to loadBm25Index's round(avg·n)
-      // reconstruction, which is not guaranteed exact at large totals —
-      // the segment path hard-requires the mergeable schema like its
-      // upsert/fold siblings instead of silently degrading the
-      // content-identity contract
-      val folded = readMergeableStats(spark, table)._4
-      // skip ledgered segments: their content is already IN the base —
-      // a fold that crashed after its merge commit but before its dir
-      // deletes must not serve those postings twice
-      val segs = all.filterNot(d => folded.contains(d.getName))
-      if (segs.isEmpty) return base
       // tombstones mask segment postings too (a takedown can target a
       // document whose fold hasn't run yet — rows must disappear
       // immediately); the base constants already carry the correction
@@ -544,94 +540,46 @@ object Search {
       // documented total_len residual until its reclaim.
       val postings = graft.operators.Tombstones.mask(spark, table,
         spark.read.parquet(segs.map(d => s"$d/postings"): _*))
-      // coalesce: a committed-but-empty stats file must merge as zero,
-      // not NPE the serve (the marker check only proves the file exists)
-      val st = spark.read.parquet(segs.map(d => s"$d/stats"): _*)
-        .agg(coalesce(sum(col("n_docs")), lit(0L)),
-          coalesce(sum(col("total_len")), lit(0L))).head()
-      val (n2, total2) = (base.nDocs + st.getLong(0),
-        base.totalLen + st.getLong(1))
+      val (n2, total2) = segmentStats(spark, segs, base.nDocs, base.totalLen)
       Bm25Index.withStats(base.postings.unionByName(postings), n2, total2)
     }
   }
 
-  /** The COMPLETE `batch=<id>` segment dirs under `segDir` — ones whose
-    * `stats/` child (written LAST by the sink — the completion marker)
-    * already holds parquet. A pre-created-but-empty segDir, a segment
-    * whose crash left only `postings/`, or a missing dir all yield Nil /
-    * get skipped, so serving and folding degrade to the complete set
-    * instead of admitting a torn segment (postings without stats would
-    * silently skew avg_len). */
-  private def completeBm25SegmentDirs(
-      spark: org.apache.spark.sql.SparkSession,
-      segDir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val hp = new org.apache.hadoop.fs.Path(segDir)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) Nil
-    else fs.listStatus(hp).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath)
-      .filter { d =>
-        val st = new org.apache.hadoop.fs.Path(d, "stats")
-        fs.exists(st) && fs.listStatus(st)
-          .exists(_.getPath.getName.endsWith(".parquet"))
-      }
+  /** (n, total) plus the sum over `segs`' stats rows; a committed but
+    * empty stats file merges as zero. */
+  private def segmentStats(spark: org.apache.spark.sql.SparkSession,
+      segs: Seq[org.apache.hadoop.fs.Path], n: Long, total: Long): (Long, Long) = {
+    val st = spark.read.parquet(segs.map(d => s"$d/stats"): _*)
+      .agg(coalesce(sum(col("n_docs")), lit(0L)),
+        coalesce(sum(col("total_len")), lit(0L))).head()
+    (n + st.getLong(0), total + st.getLong(1))
   }
 
   /** Fold streaming-admitted BM25 segments into the base artifact — the
     * cheap half of the ingest loop, and (unlike IVF) there is no
     * expensive half: nothing is trained, so no retrain cadence exists.
     * Segment postings append under the artifact's pinned word-bucket
-    * spec, the stats tables merge in long arithmetic, and exactly the
-    * enumerated `batch=<id>` dirs are deleted (the
-    * [[graft.operators.Similarity.foldIvfSegments]] discipline: a
-    * recursive segDir delete would destroy a batch a still-running sink
-    * committed between the read and the delete). No-op on a
-    * missing/empty dir.
-    *
-    * IDEMPOTENT BY LEDGER: the merged stats and the set of folded
-    * `batch=<id>` dirs commit in ONE one-row stats write, and both the
-    * retry and the segment serve skip ledgered dirs. The windows,
-    * precisely:
-    *  - unledgered append committed, the merge commit didn't: the RETRY
-    *    re-appends those postings — stats still merge exactly once (the
-    *    crashed attempt never committed them), and the duplicated rows
-    *    are EXACT duplicates ((id, doclen, word, tf) is unique per doc
-    *    in any legitimate artifact), so [[compactBm25Index]]
-    *    `(dedupExact = true)` heals the artifact in one pass — the
-    *    documented recovery, where the id-keyed ANN stores leave
-    *    recovery to caller-side id dedup;
-    *  - merge commit landed, dir deletes didn't: the retry and every
-    *    concurrent [[loadBm25IndexWithSegments]] SKIP the ledgered dirs
-    *    — no double-counted stats (the pre-ledger silent avg_len/idf
-    *    skew), no twice-served postings; the retry just finishes the
-    *    deletes. Ledger entries for deleted dirs go inert and are
-    *    pruned by the next fold's write (batch ids never recur under a
-    *    live checkpoint; resetting the checkpoint re-ingests from
-    *    scratch and owns its own identity, as everywhere else). */
+    * spec and the stats merge in long arithmetic, through
+    * [[graft.operators.Segments]]' ledgered fold, whose ledger here is
+    * the stats row's `folded_batches`: the merged stats and the ledger
+    * commit in ONE one-row stats write, so the stats can never merge
+    * twice. A crash between the postings append and that commit
+    * re-appends those postings on retry; they are EXACT duplicates
+    * ((id, doclen, word, tf) is unique per doc in any legitimate
+    * artifact), so [[compactBm25Index]]`(dedupExact = true)` heals the
+    * artifact in one pass — the documented recovery. */
   def foldBm25Segments(spark: org.apache.spark.sql.SparkSession,
       table: String, segDir: String): Unit = {
-    val present = completeBm25SegmentDirs(spark, segDir)
-    if (present.nonEmpty) {
-      val (n, buckets, total, ledger, token) = readMergeableStats(spark, table)
-      val todo = present.filterNot(d => ledger.contains(d.getName))
-      if (todo.nonEmpty) {
-        spark.read.parquet(todo.map(d => s"$d/postings"): _*)
-          .write.mode("append").format("parquet")
-          .bucketBy(buckets, "word").sortBy("word").saveAsTable(table)
-        val st = spark.read.parquet(todo.map(d => s"$d/stats"): _*)
-          .agg(coalesce(sum(col("n_docs")), lit(0L)),
-            coalesce(sum(col("total_len")), lit(0L))).head()
-        val (n2, total2) = (n + st.getLong(0), total + st.getLong(1))
-        // ONE commit carries the merged stats AND the ledger covering
-        // every dir about to be deleted — the idempotence point
-        writeStats(spark, table, n2,
-          if (n2 == 0) 0.0 else total2.toDouble / n2, buckets, total2,
-          foldedBatches = present.map(_.getName), reclaimToken = token)
-      }
-      val fs = new org.apache.hadoop.fs.Path(segDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      present.foreach(d => fs.delete(d, true))
+    lazy val (n, buckets, total, ledger, token) = readMergeableStats(spark, table)
+    graft.operators.Segments.fold(spark, segDir, "stats", ledger.toSet) { todo =>
+      spark.read.parquet(todo.map(d => s"$d/postings"): _*)
+        .write.mode("append").format("parquet")
+        .bucketBy(buckets, "word").sortBy("word").saveAsTable(table)
+      segmentStats(spark, todo, n, total)
+    } { case ((n2, total2), present) =>
+      writeStats(spark, table, n2,
+        if (n2 == 0) 0.0 else total2.toDouble / n2, buckets, total2,
+        foldedBatches = present, reclaimToken = token)
     }
   }
 
@@ -708,9 +656,8 @@ object Search {
     val scan =
       if (segDir.isEmpty) baseScan
       else {
-        val folded = readMergeableStats(spark, table)._4
-        val segs = completeBm25SegmentDirs(spark, segDir)
-          .filterNot(d => folded.contains(d.getName))
+        val segs = graft.operators.Segments.pending(spark, segDir, "stats")(
+          readMergeableStats(spark, table)._4.toSet)
         if (segs.isEmpty) baseScan
         else baseScan.unionByName(
           spark.read.parquet(segs.map(d => s"$d/postings"): _*)

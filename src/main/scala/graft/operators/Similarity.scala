@@ -856,7 +856,6 @@ object Similarity {
       s"no staged generation to promote for '$table' — run " +
         "buildNextIvfGeneration (or compactIvfIndex) first")
     catchUpTrained(spark, table, segDir, staleCols = Seq("cluster"),
-      completeDirs = completeSegmentDirs(spark, _),
       admit = (rows, _, vecCol) => {
         // a promote RERUN may find the centroids sibling already
         // swapped (crash between the two promotes) — the new
@@ -887,8 +886,6 @@ object Similarity {
     // ids: a serve no-op, healed by the next compaction.
     graft.operators.Tombstones.retireConsumed(spark, table, consumedTomb)
     graft.sources.Sources.replaceTable(spark, s"${next}_basis")
-    segDir.foreach(d => deleteLedgeredSegmentDirs(spark, table, d,
-      completeSegmentDirs(spark, _)))
     loadIvfIndex(spark, table)
   }
 
@@ -903,46 +900,35 @@ object Similarity {
     * (silent recall loss). Cost is O(delta): only the diffed files and
     * unledgered segments are read — the corpus is never re-scanned.
     *
-    * Idempotence (the fold-ledger idiom): consumed segments commit into
-    * the artifact's fold ledger and consumed base files into the basis,
-    * each in one table write, AFTER the append — a retry skips what
-    * already committed. The residual window (append committed, commit
-    * didn't) re-admits on retry: exact-duplicate rows under the same
-    * documented id-dedup recovery every append path carries. The ledger
-    * write lands BEFORE the swap on purpose: a crash there briefly
-    * hides the consumed segments from the OLD generation's serve (one
-    * promote rerun heals it), which is strictly better than the
-    * alternative ordering, where a crash would serve stale-assignment
-    * segments against the NEW generation — wrong results, not missing
-    * ones. A basis-less staged build (pre-basis or torn) degrades to
-    * the plain swap. */
+    * Idempotence: the segments go through the ledgered fold
+    * ([[graft.operators.Segments]]) with the staged table as its
+    * target, and consumed base files commit into the basis AFTER their
+    * append — a retry skips what already committed. The residual window
+    * (append committed, commit didn't) re-admits on retry:
+    * exact-duplicate rows under the same documented id-dedup recovery
+    * every append path carries. The ledger commit and the segment
+    * deletes land BEFORE the swap on purpose: the ledger hides the
+    * consumed segments from the OLD generation's serve, which a crash
+    * before the swap leaves briefly short of them (one promote rerun
+    * heals it) — strictly better than the alternative ordering, where a
+    * crash would serve stale-assignment segments against the NEW
+    * generation: wrong results, not missing ones. A basis-less staged
+    * build (pre-basis or torn) degrades to the plain swap. */
   private def catchUpTrained(spark: org.apache.spark.sql.SparkSession,
       table: String, segDir: Option[String], staleCols: Seq[String],
-      completeDirs: String => Seq[org.apache.hadoop.fs.Path],
       admit: (DataFrame, String, String) => Unit): Unit = {
     val basisTable = s"${table}__next_basis"
     graft.sources.Sources.readBuildBasis(spark, basisTable).foreach {
       case (basis, idCol, vecCol) =>
+        segDir.foreach(d => graft.operators.Segments.foldInto(spark, table, d)(
+          segs => admit(graft.operators.Segments.read(spark, d, segs)
+            .drop(staleCols: _*), idCol, vecCol)))
         val loc = graft.sources.Sources.tableLocationOf(spark, table)
         val delta = graft.sources.Sources.tableDataFiles(spark, table)
           .filterNot(f => basis.contains((0, f)))
-        val ledger = foldLedger(spark, table)
-        val present = segDir.map(completeDirs).getOrElse(Nil)
-        val segs = present.filterNot(d => ledger.contains(d.getName))
-        if (delta.nonEmpty || segs.nonEmpty) {
-          val parts =
-            (if (delta.isEmpty) Nil
-             else Seq(spark.read.option("basePath", loc)
-               .parquet(delta: _*))) ++
-            (if (segs.isEmpty) Nil
-             else Seq(spark.read.option("basePath", segDir.get)
-               .parquet(segs.map(_.toString): _*).drop("batch")))
-          admit(parts.reduce(_ unionByName _).drop(staleCols: _*),
-            idCol, vecCol)
-          if (segs.nonEmpty)
-            writeFoldLedger(spark, table,
-              (present.map(_.getName).filter(ledger.contains) ++
-                segs.map(_.getName)).distinct)
+        if (delta.nonEmpty) {
+          admit(spark.read.option("basePath", loc).parquet(delta: _*)
+            .drop(staleCols: _*), idCol, vecCol)
           // the rewrite preserves the build's reclaim half (consumed
           // tombstone snapshot + token) — a catch-up must not make the
           // promote forget which tombstones the staged rewrite consumed
@@ -955,149 +941,54 @@ object Similarity {
     }
   }
 
-  /** Post-swap cleanup of segment dirs the catch-up consumed (they are
-    * in the fold ledger, so serve already skips them); a crash before
-    * this is data-safe debris the next fold's delete pass clears. */
-  private def deleteLedgeredSegmentDirs(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      segDir: String,
-      completeDirs: String => Seq[org.apache.hadoop.fs.Path]): Unit = {
-    val ledger = foldLedger(spark, table)
-    val fs = new org.apache.hadoop.fs.Path(segDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    completeDirs(segDir).filter(d => ledger.contains(d.getName))
-      .foreach(d => fs.delete(d, true))
-  }
-
   /** Load the IVF index over base table ∪ streaming-admitted segments
-    * ([[graft.streaming.Streaming.ivfIngestSink]]'s `batch=<id>/
-    * cluster=<c>` layout): the segment rows carry the SAME
+    * ([[graft.streaming.Streaming.ivfIngestSink]]'s `cluster=<c>`
+    * partitioned segments): the segment rows carry the SAME
     * frozen-centroid assignments as the base, and `cluster` is a
     * partition column in BOTH sources, so a probe's `cluster IN (...)`
-    * filter prunes directories across base and every segment alike. A
-    * missing/empty segment dir serves the base alone (the
-    * subscribe-before-data shape). */
+    * filter prunes directories across base and every segment alike.
+    * Ledgered and incomplete segments are skipped
+    * ([[graft.operators.Segments]]). */
   def loadIvfIndexWithSegments(spark: org.apache.spark.sql.SparkSession,
       table: String, segDir: String): IvfIndex = {
     val base = loadIvfIndex(spark, table)
-    // ledgered segments are already folded INTO the base — serving them
-    // again (a fold crashed between its ledger commit and its dir
-    // deletes) would double-count their rows
-    val folded = foldLedger(spark, table)
-    val segs = completeSegmentDirs(spark, segDir)
-      .filterNot(d => folded.contains(d.getName))
+    val segs = graft.operators.Segments.pendingFor(spark, table, segDir)
     if (segs.isEmpty) base
     // segments mask too (base.assigned already does, via loadIvfIndex):
     // a takedown must hide a vector even while it is segment-resident
     else IvfIndex(base.assigned.unionByName(
       graft.operators.Tombstones.mask(spark, table,
-        spark.read.option("basePath", segDir)
-          .parquet(segs.map(_.toString): _*).drop("batch"))), base.centroids)
-  }
-
-  /** An artifact's FOLD LEDGER — the `batch=<id>` segment dirs a fold
-    * has already appended into the base table, recorded in the sibling
-    * `<table>_folded` between the append and the dir deletes so a fold
-    * retry (or a concurrent segment serve) skips them instead of
-    * double-admitting. Reset by the artifact's save (a rebuilt artifact
-    * starts with a fresh identity). Missing table = empty ledger (the
-    * pre-ledger and freshly-built shapes). Shared by the IVF, PQ, and
-    * LSH fold paths; BM25's ledger rides in its stats table instead. */
-  private[graft] def foldLedger(spark: org.apache.spark.sql.SparkSession,
-      table: String): Set[String] =
-    if (!spark.catalog.tableExists(s"${table}_folded")) Set.empty
-    else spark.table(s"${table}_folded").collect().map(_.getString(0)).toSet
-
-  /** Commit the fold ledger = exactly `present` (stale ids for already-
-    * deleted dirs prune away). Written between the append and the dir
-    * deletes — the idempotence point of every `fold*Segments`. */
-  private[graft] def writeFoldLedger(spark: org.apache.spark.sql.SparkSession,
-      table: String, present: Seq[String]): Unit = {
-    import spark.implicits._
-    graft.sources.Sources.replaceTable(spark, s"${table}_folded")
-    present.toDF("batch")
-      .write.mode("overwrite").format("parquet")
-      .options(graft.sources.Sources.stagedWriteOptions(spark,
-        s"${table}_folded"))
-      .saveAsTable(s"${table}_folded")
-  }
-
-  /** The COMPLETE `batch=<id>` segment dirs under `segDir` — ones that
-    * already carry `cluster=` partition children. A pre-created-but-
-    * empty segDir (the subscribe-before-data shape), a dir holding only
-    * a crashed write's `_temporary`, or a missing dir all yield Nil, so
-    * serving/folding degrade to the base instead of tripping parquet
-    * schema inference on footerless paths. */
-  private def completeSegmentDirs(spark: org.apache.spark.sql.SparkSession,
-      segDir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val hp = new org.apache.hadoop.fs.Path(segDir)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) Nil
-    else fs.listStatus(hp).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath)
-      .filter(d => fs.listStatus(d)
-        .exists(c => c.isDirectory && c.getPath.getName.startsWith("cluster=")))
+        graft.operators.Segments.read(spark, segDir, segs))), base.centroids)
   }
 
   /** Fold streaming-admitted segments into the base IVF table — the
     * CHEAP half of the compaction cadence: segment rows already carry
     * the frozen-centroid assignments, so the fold is a plain partition
     * append (no re-encode, no retrain); only touched cluster partitions
-    * gain files. The fold ENUMERATES the complete `batch=<id>` dirs
-    * first, reads exactly those, and deletes exactly those — a
-    * recursive segDir delete would destroy any batch a still-running
-    * [[graft.streaming.Streaming.ivfIngestSink]] committed between the
-    * read and the delete (its checkpoint marks the batch done, so it
-    * would never be rewritten: permanent row loss). The dir itself
-    * stays, ready for the next admission. No-op on a missing/empty dir.
-    *
-    * IDEMPOTENT BY LEDGER ([[foldBm25Segments]]'s discipline, adapted —
-    * IVF has no stats table, so the ledger is the sibling
-    * `<table>_folded`): folded batch ids are committed between the
-    * append and the dir deletes, and both the retry and
-    * [[loadIvfIndexWithSegments]] skip ledgered dirs. The one remaining
-    * window — append committed, ledger commit didn't — re-admits those
-    * rows on retry; run folds under the same id-dedup discipline as any
-    * append (the caller owns identity), exactly as before. */
+    * gain files. Idempotent by the `<table>_folded` ledger
+    * ([[graft.operators.Segments]]' ledgered fold). */
   def foldIvfSegments(spark: org.apache.spark.sql.SparkSession,
-      table: String, segDir: String): Unit = {
-    val present = completeSegmentDirs(spark, segDir)
-    if (present.nonEmpty) {
-      val ledger = foldLedger(spark, table)
-      val todo = present.filterNot(d => ledger.contains(d.getName))
-      if (todo.nonEmpty) {
-        spark.read.option("basePath", segDir)
-          .parquet(todo.map(_.toString): _*).drop("batch")
-          .write.mode("append").format("parquet")
-          .partitionBy("cluster").saveAsTable(table)
-        // ledger covers every dir about to be deleted — a crash from
-        // here on makes the retry skip, never re-append (stale ids for
-        // deleted dirs go inert and are pruned by the next fold)
-        writeFoldLedger(spark, table, present.map(_.getName))
-      }
-      val fs = new org.apache.hadoop.fs.Path(segDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      present.foreach(d => fs.delete(d, true))
-    }
-  }
+      table: String, segDir: String): Unit =
+    graft.operators.Segments.foldInto(spark, table, segDir)(todo =>
+      graft.operators.Segments.read(spark, segDir, todo)
+        .write.mode("append").format("parquet")
+        .partitionBy("cluster").saveAsTable(table))
 
   /** LSH candidates from the persisted layout ∪ streaming-admitted
     * segments ([[graft.streaming.Streaming.lshIngestSink]]'s
-    * `batch=<id>/t<k>/bucket=<b>` layout): per hash table, the probe
-    * set prunes bucket partitions in the base projection AND in every
-    * complete, unledgered segment's matching `t<k>` subtree — the same
-    * directory pruning, extended over the not-yet-folded admissions.
-    * Hyperplanes are deterministic, so segment codes are identical to
-    * what a rebuild would assign. */
+    * `t<k>/bucket=<b>` parts): per hash table, the probe set prunes
+    * bucket partitions in the base projection AND in every complete,
+    * unledgered segment's matching `t<k>` part — the same directory
+    * pruning, extended over the not-yet-folded admissions. Hyperplanes
+    * are deterministic, so segment codes are identical to what a
+    * rebuild would assign. */
   def lshServedCandidatesWithSegments(
       spark: org.apache.spark.sql.SparkSession, table: String,
       idCol: String, vecCol: String, query: Seq[Double], probeDist: Int,
       segDir: String): DataFrame = {
     val (bits, tables, dims) = lshMetaFor(spark, table)
-    val folded = foldLedger(spark, table)
-    val segs = completeLshSegmentDirs(spark, segDir, tables)
-      .filterNot(d => folded.contains(d.getName))
+    val segs = graft.operators.Segments.pendingFor(spark, table, segDir,
+      s"t${tables - 1}")
     (0 until tables).map { t =>
       val probes = codesWithin(queryCode(query, bits, t, dims), bits, probeDist)
       val base = spark.table(s"${table}_t$t")
@@ -1122,56 +1013,24 @@ object Similarity {
     bruteForceTopK(lshServedCandidatesWithSegments(spark, table, idCol,
       vecCol, query, probeDist, segDir), idCol, vecCol, query, k)
 
-  /** The COMPLETE `batch=<id>` dirs of the per-projection LSH segment
-    * layout: the sink writes projections t0..t(T-1) in order and a
-    * replay retracts t(T-1) first, so a batch dir whose LAST projection
-    * subtree exists (with bucket children) is complete — the stats-last
-    * marker discipline, per-projection. */
-  private def completeLshSegmentDirs(
-      spark: org.apache.spark.sql.SparkSession, segDir: String,
-      tables: Int): Seq[org.apache.hadoop.fs.Path] = {
-    val hp = new org.apache.hadoop.fs.Path(segDir)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) Nil
-    else fs.listStatus(hp).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath)
-      .filter { d =>
-        val last = new org.apache.hadoop.fs.Path(d, s"t${tables - 1}")
-        fs.exists(last) && fs.listStatus(last)
-          .exists(c => c.isDirectory && c.getPath.getName.startsWith("bucket="))
-      }
-  }
-
   /** Fold streaming-admitted LSH segments into the base projections —
-    * the [[foldIvfSegments]] discipline per hash table: segment rows
-    * already carry deterministic-hyperplane bucket codes, so each
-    * projection's fold is a plain bucket-partitioned append; the fold
-    * ledger commits once after ALL projections appended, before the dir
-    * deletes, and retry/serve skip ledgered batches. The one remaining
-    * window — a crash between the projection appends and the ledger
-    * commit — re-appends every projection on retry: exact duplicate
-    * rows, invisible to serving (candidates dedup by id) and owned by
-    * the caller's id-dedup discipline, as in every append path. */
+    * [[foldIvfSegments]] per hash table: segment rows already carry
+    * deterministic-hyperplane bucket codes, so each projection's fold is
+    * a plain bucket-partitioned append, and the ledger commits once
+    * after ALL projections appended. A crash before that commit
+    * re-appends every projection on retry: exact duplicate rows,
+    * invisible to serving (candidates dedup by id). */
   def foldLshSegments(spark: org.apache.spark.sql.SparkSession,
       table: String, segDir: String): Unit = {
     val (_, tables, _) = lshMetaFor(spark, table)
-    val present = completeLshSegmentDirs(spark, segDir, tables)
-    if (present.nonEmpty) {
-      val ledger = foldLedger(spark, table)
-      val todo = present.filterNot(d => ledger.contains(d.getName))
-      if (todo.nonEmpty) {
-        for (t <- 0 until tables)
-          todo.map(d => spark.read.option("basePath", s"$d/t$t")
-              .parquet(s"$d/t$t"))
-            .reduce(_ unionByName _)
-            .write.mode("append").format("parquet")
-            .partitionBy("bucket").saveAsTable(s"${table}_t$t")
-        writeFoldLedger(spark, table, present.map(_.getName))
-      }
-      val fs = new org.apache.hadoop.fs.Path(segDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      present.foreach(d => fs.delete(d, true))
+    graft.operators.Segments.foldInto(spark, table, segDir,
+        s"t${tables - 1}") { todo =>
+      for (t <- 0 until tables)
+        todo.map(d => spark.read.option("basePath", s"$d/t$t")
+            .parquet(s"$d/t$t"))
+          .reduce(_ unionByName _)
+          .write.mode("append").format("parquet")
+          .partitionBy("bucket").saveAsTable(s"${table}_t$t")
     }
   }
 
@@ -1320,63 +1179,30 @@ object Similarity {
   }
 
   /** Load the PQ index over base table ∪ streaming-admitted segments
-    * ([[graft.streaming.Streaming.pqIngestSink]]'s plain `batch=<id>/`
-    * layout): segment rows carry the SAME frozen-codebook codes as the
-    * base (deterministic map-side encode), so base ∪ segments is
-    * content-identical to upserting every admitted batch. Ledgered and
-    * torn segments are skipped; a missing/empty dir serves the base
-    * alone (the subscribe-before-data shape). */
+    * ([[graft.streaming.Streaming.pqIngestSink]]): segment rows carry
+    * the SAME frozen-codebook codes as the base (deterministic map-side
+    * encode), so base ∪ segments is content-identical to upserting every
+    * admitted batch. Ledgered and incomplete segments are skipped
+    * ([[graft.operators.Segments]]). */
   def loadPqIndexWithSegments(spark: org.apache.spark.sql.SparkSession,
       table: String, segDir: String): PqIndex = {
     val base = loadPqIndex(spark, table)
-    val folded = foldLedger(spark, table)
-    val segs = completePlainSegmentDirs(spark, segDir)
-      .filterNot(d => folded.contains(d.getName))
+    val segs = graft.operators.Segments.pendingFor(spark, table, segDir)
     if (segs.isEmpty) base
     // segments mask too, as in loadIvfIndexWithSegments
     else PqIndex(base.encoded.unionByName(
       graft.operators.Tombstones.mask(spark, table,
-        spark.read.option("basePath", segDir)
-          .parquet(segs.map(_.toString): _*).drop("batch"))), base.codebooks)
-  }
-
-  /** The COMPLETE `batch=<id>` dirs of a PLAIN (unpartitioned) segment
-    * layout — ones carrying the parquet job-commit marker (`_SUCCESS`),
-    * which a crashed write never leaves. */
-  private[graft] def completePlainSegmentDirs(
-      spark: org.apache.spark.sql.SparkSession,
-      segDir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val hp = new org.apache.hadoop.fs.Path(segDir)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) Nil
-    else fs.listStatus(hp).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath)
-      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
+        graft.operators.Segments.read(spark, segDir, segs))), base.codebooks)
   }
 
   /** Fold streaming-admitted PQ segments into the base encoded table —
-    * [[foldIvfSegments]]'s discipline on the plain layout: segment rows
-    * already carry frozen-codebook codes, so the fold is a plain append;
-    * the fold ledger commits between the append and the dir deletes, and
-    * retry/serve skip ledgered batches. No-op on a missing/empty dir. */
+    * [[foldIvfSegments]] on the plain layout: segment rows already carry
+    * frozen-codebook codes, so the fold is a plain append. */
   def foldPqSegments(spark: org.apache.spark.sql.SparkSession,
-      table: String, segDir: String): Unit = {
-    val present = completePlainSegmentDirs(spark, segDir)
-    if (present.nonEmpty) {
-      val ledger = foldLedger(spark, table)
-      val todo = present.filterNot(d => ledger.contains(d.getName))
-      if (todo.nonEmpty) {
-        spark.read.option("basePath", segDir)
-          .parquet(todo.map(_.toString): _*).drop("batch")
-          .write.mode("append").format("parquet").saveAsTable(table)
-        writeFoldLedger(spark, table, present.map(_.getName))
-      }
-      val fs = new org.apache.hadoop.fs.Path(segDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      present.foreach(d => fs.delete(d, true))
-    }
-  }
+      table: String, segDir: String): Unit =
+    graft.operators.Segments.foldInto(spark, table, segDir)(todo =>
+      graft.operators.Segments.read(spark, segDir, todo)
+        .write.mode("append").format("parquet").saveAsTable(table))
 
   /** RETRAIN-on-cadence compaction for the PQ artifact — the closing
     * half of [[upsertPqIndex]]'s frozen-codebook contract, mirroring
@@ -1464,7 +1290,6 @@ object Similarity {
       s"no staged generation to promote for '$table' — run " +
         "buildNextPqGeneration (or compactPqIndex) first")
     catchUpTrained(spark, table, segDir, staleCols = Seq("pq_code"),
-      completeDirs = completePlainSegmentDirs(spark, _),
       admit = (rows, _, vecCol) => {
         import graft.functions.VectorExpressions.{vec_l2_normalize, pq_encode}
         // rerun-safe codebook source, as in the IVF promote
@@ -1491,8 +1316,6 @@ object Similarity {
     // retire consumed tombstones (promoteIvfGeneration's discipline)
     graft.operators.Tombstones.retireConsumed(spark, table, consumedTomb)
     graft.sources.Sources.replaceTable(spark, s"${next}_basis")
-    segDir.foreach(d => deleteLedgeredSegmentDirs(spark, table, d,
-      completePlainSegmentDirs(spark, _)))
     loadPqIndex(spark, table)
   }
 

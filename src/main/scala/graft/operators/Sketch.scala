@@ -233,50 +233,31 @@ object Sketch {
   }
 
   /** Load a persisted sketch cube over base ∪ streaming-admitted
-    * segments ([[graft.streaming.Streaming.sketchCubeIngestSink]]'s
-    * plain `batch=<id>/` layout): segment rows are finest-group sketch
-    * rows exactly like the base's, so base ∪ segments is
-    * content-equivalent to upserting every admitted batch — the serve-
-    * side rollup merges across all of them. Ledgered and torn segments
-    * are skipped (the shared fold-ledger contract); a missing/empty dir
-    * serves the base alone. */
+    * segments ([[graft.streaming.Streaming.sketchCubeIngestSink]]):
+    * segment rows are finest-group sketch rows exactly like the base's,
+    * so base ∪ segments is content-equivalent to upserting every
+    * admitted batch — the serve-side rollup merges across all of them.
+    * Ledgered and incomplete segments are skipped
+    * ([[graft.operators.Segments]]). */
   def loadCubeWithSegments(spark: org.apache.spark.sql.SparkSession,
       table: String, segDir: String): DataFrame = {
     val base = spark.table(table)
-    val folded = Similarity.foldLedger(spark, table)
-    val segs = Similarity.completePlainSegmentDirs(spark, segDir)
-      .filterNot(d => folded.contains(d.getName))
+    val segs = Segments.pendingFor(spark, table, segDir)
     if (segs.isEmpty) base
-    else base.unionByName(
-      spark.read.option("basePath", segDir)
-        .parquet(segs.map(_.toString): _*).drop("batch"))
+    else base.unionByName(Segments.read(spark, segDir, segs))
   }
 
   /** Fold streaming-admitted cube segments into the base table — a
     * plain append (segment rows ARE finest-group sketch rows; nothing
-    * re-derives), with the shared fold ledger committed between the
-    * append and the dir deletes so retry and serve skip ledgered
-    * batches ([[graft.operators.Similarity.foldPqSegments]]'s
-    * discipline). The per-group row accumulation this leaves is exactly
-    * what [[compactDistinctCube]]/[[compactQuantileCube]] heal on their
-    * cadence. No-op on a missing/empty dir. */
+    * re-derives) through [[graft.operators.Segments]]' ledgered fold.
+    * The per-group row accumulation this leaves is exactly what
+    * [[compactDistinctCube]]/[[compactQuantileCube]] heal on their
+    * cadence. */
   def foldSketchSegments(spark: org.apache.spark.sql.SparkSession,
-      table: String, segDir: String): Unit = {
-    val present = Similarity.completePlainSegmentDirs(spark, segDir)
-    if (present.nonEmpty) {
-      val ledger = Similarity.foldLedger(spark, table)
-      val todo = present.filterNot(d => ledger.contains(d.getName))
-      if (todo.nonEmpty) {
-        spark.read.option("basePath", segDir)
-          .parquet(todo.map(_.toString): _*).drop("batch")
-          .write.mode("append").format("parquet").saveAsTable(table)
-        Similarity.writeFoldLedger(spark, table, present.map(_.getName))
-      }
-      val fs = new org.apache.hadoop.fs.Path(segDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      present.foreach(d => fs.delete(d, true))
-    }
-  }
+      table: String, segDir: String): Unit =
+    Segments.foldInto(spark, table, segDir)(todo =>
+      Segments.read(spark, segDir, todo)
+        .write.mode("append").format("parquet").saveAsTable(table))
 
   /** Intermediate rollup that KEEPS sketches mergeable: union down to
     * `keepKeys`, preserving the `sketch` column for further rollups —

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, StreamingQuery}
 import scala.util.control.NonFatal
+import graft.operators.Segments
 
 /** Event projection for the custom-state operator. */
 case class UserEvent(user_id: Long, value: Double)
@@ -556,9 +557,8 @@ object Streaming {
     *   in-stream digest dedup — state = fixed-width digests expiring
     *   with the watermark — then the left-anti corpus join) → map-side
     *   curation (quality score band + encoding-hygiene scan, both
-    *   codegen'd zero-shuffle predicates) → idempotent per-batch segment
-    *   sink (`outDir/batch=<id>`, overwrite — a replayed batch rewrites
-    *   its own segment).
+    *   codegen'd zero-shuffle predicates) → one-part segment sink
+    *   ([[graft.operators.Segments]]) under `outDir`.
     *
     * The stateful tier (dropDuplicatesWithinWatermark) lives in the
     * STREAM plan — it cannot run inside foreachBatch — while the
@@ -612,7 +612,7 @@ object Streaming {
     val spark = stream.sparkSession
     withStartConf(spark, (noDataKey -> "false") +:
         (if (checkpoint.isEmpty) Seq(partsKey -> cappedParts(spark)) else Nil))(
-      segmentSink(curated, outDir, checkpoint, trigger = trigger)(identity))
+      segmentSink(curated, outDir, checkpoint, trigger)(plain))
   }
 
   /** Streaming NEAR-duplicate ingest dedup against a static corpus — the
@@ -630,9 +630,8 @@ object Streaming {
     * shingle index on the shingle hash — candidate generation is the
     * shared-shingle inverted-index join (complete for any τ > 0: two
     * sets with Jaccard ≥ τ share a shingle), never a cartesian product —
-    * then survivors write as an idempotent per-batch parquet segment
-    * (`outDir/batch=<id>`, overwrite — a replayed batch rewrites its own
-    * segment, the lakehouse ingest contract shared with [[zOrderedSink]]).
+    * then survivors land as a one-part segment
+    * ([[graft.operators.Segments]]) under `outDir`.
     *
     * Determinism contract: batches are deduped against the FIXED corpus
     * only, not against earlier admitted batches — admitting across
@@ -656,9 +655,9 @@ object Streaming {
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Contamination
     segmentSink(stream, outDir, checkpoint)(batch =>
-      Contamination.decontaminateFuzzy(batch, idCol, textCol,
+      plain(Contamination.decontaminateFuzzy(batch, idCol, textCol,
         corpus, idCol, textCol, n, minJaccard,
-        broadcastBench = broadcastCorpus))
+        broadcastBench = broadcastCorpus)))
   }
 
   /** [[nearDedupAgainstSink]] against a PREBUILT corpus shingle index —
@@ -678,8 +677,8 @@ object Streaming {
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Contamination
     segmentSink(stream, outDir, checkpoint)(batch =>
-      Contamination.decontaminateFuzzyFromIndex(batch, idCol, textCol,
-        corpusIndex, n, minJaccard))
+      plain(Contamination.decontaminateFuzzyFromIndex(batch, idCol, textCol,
+        corpusIndex, n, minJaccard)))
   }
 
   /** Close the near-dup ingest loop on a COMPACTION cadence: rebuild the
@@ -692,8 +691,8 @@ object Streaming {
     * the new generation serves tomorrow.
     *
     * `admittedDir` is the segment sink written by
-    * [[nearDedupAgainstSink]]/[[nearDedupAgainstIndexSink]] (the
-    * `batch=<id>` layout; the partition column is dropped here). The
+    * [[nearDedupAgainstSink]]/[[nearDedupAgainstIndexSink]]; its
+    * complete segments are read ([[graft.operators.Segments]]). The
     * index table is dropped and rebuilt — callers key `table` by corpus
     * generation (the `artifactTable` mtime idiom) when the corpus
     * itself can also change. */
@@ -702,13 +701,12 @@ object Streaming {
       n: Int = 3, buckets: Int = 32): DataFrame = {
     import graft.operators.Contamination
     val spark = corpus.sparkSession
-    // a day where the stream admitted nothing never creates the sink
-    // dir — compact over the corpus alone instead of aborting the job
-    val hp = new org.apache.hadoop.fs.Path(admittedDir)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a day where the stream admitted nothing (no complete segment, or
+    // no sink dir) compacts over the corpus alone
+    val admittedSegs = Segments.pending(spark, admittedDir, "")(Set.empty)
     val docs = corpus.select(col(idCol), col(textCol))
     val unioned =
-      if (!fs.exists(hp)) docs
+      if (admittedSegs.isEmpty) docs
       else {
         // dedup the UNION, not just the admitted side: duplicate ids can
         // come from stale segments (a checkpoint-less rerun slicing the
@@ -722,7 +720,7 @@ object Streaming {
         // index the corpus is the authority, and a bare dropDuplicates
         // would let whichever partition ordered first silently replace
         // the corpus text with the admitted stream's.
-        val admitted = spark.read.parquet(admittedDir)
+        val admitted = Segments.read(spark, admittedDir, admittedSegs)
           .select(col(idCol), col(textCol))
         docs.withColumn("__prio", lit(0))
           .unionByName(admitted.withColumn("__prio", lit(1)))
@@ -770,23 +768,21 @@ object Streaming {
 
   /** Streaming ANN ingest — the live admission path for the IVF serving
     * artifact, composing [[graft.operators.Similarity.upsertIvfIndex]]'s
-    * frozen-centroid contract with the idempotent segment sink: each
-    * micro-batch of NEW embeddings is assigned map-side against the
-    * artifact's centroids (loaded ONCE at query build — KBs, the
-    * bounded-artifact contract) and lands as its own
-    * `segDir/batch=<id>/cluster=<c>/` parquet segment. Overwrite by
-    * batch id keeps replays idempotent — the reason this is NOT a bare
-    * per-batch `upsertIvfIndex` (a replayed table append would
-    * double-admit its rows); cluster partitioning inside every segment
-    * keeps probe pruning effective across base + segments.
+    * frozen-centroid contract with the segment sink
+    * ([[graft.operators.Segments]]): each micro-batch of NEW embeddings
+    * is assigned map-side against the artifact's centroids (loaded ONCE
+    * at query build — KBs, the bounded-artifact contract) and lands as a
+    * one-part, `cluster=<c>`-partitioned segment. Overwrite by batch id
+    * keeps replays idempotent — the reason this is NOT a bare per-batch
+    * `upsertIvfIndex` (a replayed table append would double-admit its
+    * rows); cluster partitioning inside every segment keeps probe
+    * pruning effective across base + segments.
     *
-    * Serve with [[graft.operators.Similarity.loadIvfIndexWithSegments]]
-    * (base ∪ admitted segments, probes prune both); fold segments into
-    * the base table on a compaction cadence with
-    * [[graft.operators.Similarity.foldIvfSegments]] (a plain append —
-    * the segments already carry the SAME frozen-centroid assignments),
-    * and retrain drift away with `compactIvfIndex` on its own cadence —
-    * the upsert-all-day / compact-nightly loop, streamed. */
+    * Serve with [[graft.operators.Similarity.loadIvfIndexWithSegments]];
+    * fold with [[graft.operators.Similarity.foldIvfSegments]] (a plain
+    * append — the segments already carry the SAME frozen-centroid
+    * assignments), and retrain drift away with `compactIvfIndex` on its
+    * own cadence — the upsert-all-day / compact-nightly loop, streamed. */
   def ivfIngestSink(stream: DataFrame, table: String, vecCol: String,
       segDir: String,
       checkpoint: Option[String] = None,
@@ -797,42 +793,19 @@ object Streaming {
     val v = col(vecCol)
     val assigned = stream.filter(v.isNotNull).withColumn("cluster",
       graft.functions.VectorExpressions.nearest_centroid_cos(v, centroids))
-    // fail at SINK CONSTRUCTION if the assigned stream's shape doesn't
-    // match the serving table: a mismatch admits green all day and only
-    // explodes at serve (strict unionByName) or fold (append) time,
-    // leaving segments that can be neither served nor folded
-    val resolver = spark.sessionState.analyzer.resolver
-    val want = spark.table(table).schema.fields
-    val got = assigned.schema.fields
-    require(want.length == got.length && want.forall(w =>
-        got.exists(g => resolver(w.name, g.name) &&
-          // catalogString carries no nullability markers — the
-          // nullability-insensitive compare (sameType is private[sql])
-          w.dataType.catalogString == g.dataType.catalogString)),
-      s"ivfIngestSink stream shape ${assigned.schema.simpleString} does " +
-        s"not match serving table '$table' " +
-        s"${spark.table(table).schema.simpleString} — admitted segments " +
-        "could be neither served (unionByName) nor folded (append)")
-    segmentSink(assigned, segDir, checkpoint,
-      write = (df, path) => df.write.mode("overwrite")
-        .partitionBy("cluster").parquet(path), trigger = trigger)(identity)
+    Segments.requireShape(spark, "ivfIngestSink", assigned.schema, table)
+    segmentSink(assigned, segDir, checkpoint, trigger)(batch => Seq("" ->
+      (batch.write.mode("overwrite").partitionBy("cluster").parquet(_))))
   }
 
   /** Streaming ANN ingest for the PQ artifact — [[ivfIngestSink]]'s
-    * discipline on the compressed-scan tier, completing the streaming
-    * admission symmetry across every serving family: each micro-batch of
-    * NEW embeddings is encoded map-side with the artifact's FROZEN
-    * codebooks (loaded once at query build — KBs, the bounded-artifact
-    * contract; the corpus is never re-encoded, the PQ-at-scale
-    * invariant) and lands as its own plain `segDir/batch=<id>/` parquet
-    * segment (the job-commit `_SUCCESS` is the completeness marker a
-    * crashed write never leaves). Overwrite by batch id keeps replays
-    * idempotent. Serve with
-    * [[graft.operators.Similarity.loadPqIndexWithSegments]]; fold on
-    * cadence with [[graft.operators.Similarity.foldPqSegments]]; codes
-    * drift away on [[graft.operators.Similarity.compactPqIndex]]'s
-    * retrain cadence — the upsert-all-day / compact-nightly loop,
-    * streamed. */
+    * discipline on the compressed-scan tier: each micro-batch of NEW
+    * embeddings is encoded map-side with the artifact's FROZEN codebooks
+    * (loaded once at query build; the corpus is never re-encoded, the
+    * PQ-at-scale invariant) and lands as a one-part segment. Serve with
+    * [[graft.operators.Similarity.loadPqIndexWithSegments]]; fold with
+    * [[graft.operators.Similarity.foldPqSegments]]; codes drift away on
+    * [[graft.operators.Similarity.compactPqIndex]]'s retrain cadence. */
   def pqIngestSink(stream: DataFrame, table: String, vecCol: String,
       segDir: String,
       checkpoint: Option[String] = None,
@@ -845,70 +818,43 @@ object Streaming {
     val v = col(vecCol)
     val encoded = stream.filter(v.isNotNull)
       .withColumn("pq_code", pq_encode(vec_l2_normalize(v), codebooks))
-    // fail at SINK CONSTRUCTION if the encoded stream's shape doesn't
-    // match the serving table (the ivfIngestSink contract)
-    val resolver = spark.sessionState.analyzer.resolver
-    val want = spark.table(table).schema.fields
-    val got = encoded.schema.fields
-    require(want.length == got.length && want.forall(w =>
-        got.exists(g => resolver(w.name, g.name) &&
-          w.dataType.catalogString == g.dataType.catalogString)),
-      s"pqIngestSink stream shape ${encoded.schema.simpleString} does " +
-        s"not match serving table '$table' " +
-        s"${spark.table(table).schema.simpleString} — admitted segments " +
-        "could be neither served (unionByName) nor folded (append)")
-    segmentSink(encoded, segDir, checkpoint, trigger = trigger)(identity)
+    Segments.requireShape(spark, "pqIngestSink", encoded.schema, table)
+    segmentSink(encoded, segDir, checkpoint, trigger)(plain)
   }
 
   /** Streaming ingest for a persisted SKETCH CUBE
     * ([[graft.operators.Sketch.buildDistinctSketches]]'s layout): each
     * micro-batch AGGREGATES to its finest-group HLL sketch rows inside
     * `foreachBatch` — per trigger the shuffle moves fixed-size sketch
-    * buffers for the batch's groups, never value sets — and lands as an
-    * idempotent plain `segDir/batch=<id>/` segment (`_SUCCESS` as the
-    * completeness marker). Serve with [[graft.operators.Sketch
+    * buffers for the batch's groups, never value sets — and lands as a
+    * one-part segment. Serve with [[graft.operators.Sketch
     * .loadCubeWithSegments]] (the rollup merges base ∪ segment rows —
     * mergeability makes admission exact for row counts and in-band for
-    * estimates); fold on cadence with [[graft.operators.Sketch
-    * .foldSketchSegments]]; the row accumulation heals at
-    * [[graft.operators.Sketch.compactDistinctCube]]. Nothing is
-    * trained, so no drift cadence exists. Fails at sink construction if
-    * the aggregated shape doesn't match the serving cube (the
-    * pqIngestSink contract). */
+    * estimates); fold with [[graft.operators.Sketch.foldSketchSegments]];
+    * the row accumulation heals at [[graft.operators.Sketch
+    * .compactDistinctCube]]. Nothing is trained, so no drift cadence
+    * exists. */
   def sketchCubeIngestSink(stream: DataFrame, table: String,
       keys: Seq[String], valueCol: String, segDir: String, lgK: Int = 12,
       checkpoint: Option[String] = None,
       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = stream.sparkSession
-    val resolver = spark.sessionState.analyzer.resolver
-    val want = spark.table(table).schema.fields
+    def sketches(df: DataFrame) =
+      graft.operators.Sketch.buildDistinctSketches(df, keys, valueCol, lgK)
     // schema only — the aggregate plan over the stream never executes
-    val got = graft.operators.Sketch
-      .buildDistinctSketches(stream, keys, valueCol, lgK)
-      .schema.fields
-    require(want.length == got.length && want.forall(w =>
-        got.exists(g => resolver(w.name, g.name) &&
-          w.dataType.catalogString == g.dataType.catalogString)),
-      s"sketchCubeIngestSink aggregated shape does not match serving " +
-        s"cube '$table' — admitted segments could be neither served " +
-        "(unionByName) nor folded (append)")
-    segmentSink(stream, segDir, checkpoint, trigger = trigger)(batch =>
-      graft.operators.Sketch.buildDistinctSketches(batch, keys, valueCol,
-        lgK))
+    Segments.requireShape(stream.sparkSession, "sketchCubeIngestSink",
+      sketches(stream).schema, table)
+    segmentSink(stream, segDir, checkpoint, trigger)(b => plain(sketches(b)))
   }
 
   /** Streaming ANN ingest for the multi-projection LSH layout: each
     * micro-batch of NEW embeddings is hashed map-side with the
     * artifact's pinned (bits, tables, dims) — deterministic hyperplanes,
     * nothing trained, so segment content is IDENTICAL to what a rebuild
-    * would assign — and lands as `segDir/batch=<id>/t<k>/bucket=<b>/`,
-    * one bucket-partitioned subtree per hash table, written in
-    * projection order with the LAST projection as the completeness
-    * marker (a replay retracts it first, the bm25IngestSink stats-last
-    * discipline). Probe pruning works inside segments exactly as in the
-    * base layout. Serve with [[graft.operators.Similarity
-    * .lshTopKServedWithSegments]]; fold on cadence with
+    * would assign — and lands as one `bucket`-partitioned part `t<k>` per
+    * hash table, the last projection as the marker part. Probe pruning
+    * works inside segments exactly as in the base layout. Serve with
+    * [[graft.operators.Similarity.lshTopKServedWithSegments]]; fold with
     * [[graft.operators.Similarity.foldLshSegments]] (no retrain cadence
     * exists — nothing drifts; [[graft.operators.Similarity
     * .compactLshIndex]] stays pure file hygiene). */
@@ -924,77 +870,23 @@ object Streaming {
     require(stream.schema.fields.exists(f => resolver(f.name, vecCol)),
       s"lshIngestSink: stream has no '$vecCol' column " +
         s"(${stream.schema.simpleString})")
-    // fail at SINK CONSTRUCTION if the hashed batch shape wouldn't match
-    // the serving projections (stream columns + the bucket code)
-    val want = spark.table(s"${table}_t0").schema.fields
-    val got = stream.schema.fields :+ org.apache.spark.sql.types.StructField(
-      "bucket", org.apache.spark.sql.types.LongType)
-    require(want.length == got.length && want.forall(w =>
-        got.exists(g => resolver(w.name, g.name) &&
-          w.dataType.catalogString == g.dataType.catalogString)),
-      s"lshIngestSink stream shape " +
-        s"(${got.map(f => s"${f.name}:${f.dataType.catalogString}").mkString(",")}) " +
-        s"does not match serving projection '${table}_t0' " +
-        s"${spark.table(s"${table}_t0").schema.simpleString} — admitted " +
-        "segments could be neither served (unionByName) nor folded (append)")
-    require(stream.isStreaming, "lshIngestSink needs a streaming frame")
-    val w = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val pinned = batch.persist()
-        try {
-          // empty micro-batches (source ticks) write no segment
-          if (!pinned.isEmpty) {
-            // a REPLAYED batch retracts its completeness marker (the
-            // LAST projection's subtree) before rewriting: per-subtree
-            // overwrite momentarily empties each t<k> dir, and the
-            // marker must not present a half-rewritten segment as
-            // complete to a concurrent serve/fold
-            val marker = new org.apache.hadoop.fs.Path(
-              s"$segDir/batch=$id/t${tables - 1}")
-            val fs = marker.getFileSystem(
-              spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(marker)) fs.delete(marker, true)
-            def writeTable(t: Int): Unit =
-              pinned.withColumn("bucket", graft.operators.Similarity
-                  .codeColumn(col(vecCol), dims, bits, t))
-                .write.mode("overwrite").partitionBy("bucket")
-                .parquet(s"$segDir/batch=$id/t$t")
-            // the per-table projections are INDEPENDENT jobs over the
-            // same pinned batch writing disjoint subtrees — submit them
-            // concurrently so each job's task tail back-fills the others
-            // (guide §2.6), EXCEPT the last projection: it is the
-            // segment-completeness marker and must land only after every
-            // other subtree is fully written. Parts keep this thread's
-            // local properties (the streaming job group: stop() cancels
-            // them), and ALL are awaited before the first failure is
-            // rethrown, so a replay never races a sibling still writing
-            if (tables > 1) {
-              val pool = java.util.concurrent.Executors.newFixedThreadPool(tables - 1)
-              val session = pinned.sparkSession
-                .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-              try (0 until tables - 1).map(t => org.apache.spark.sql.execution
-                  .SQLExecution.withThreadLocalCaptured(session, pool)(writeTable(t)))
-                .flatMap(f => scala.util.Try(f.join()).failed.toOption)
-                .headOption.foreach(e => throw Option(e.getCause).getOrElse(e))
-              finally pool.shutdown()
-            }
-            writeTable(tables - 1)
-          }
-        } finally pinned.unpersist()
-      }
-    startSink(spark, trigger.fold(w)(w.trigger), checkpoint, "ing")
+    // the hashed batch shape against the serving projections
+    Segments.requireShape(spark, "lshIngestSink", stream.schema.fields :+
+      org.apache.spark.sql.types.StructField("bucket",
+        org.apache.spark.sql.types.LongType), s"${table}_t0")
+    segmentSink(stream, segDir, checkpoint, trigger)(batch =>
+      (0 until tables).map(t => s"t$t" -> ((path: String) =>
+        batch.withColumn("bucket", graft.operators.Similarity
+            .codeColumn(col(vecCol), dims, bits, t))
+          .write.mode("overwrite").partitionBy("bucket").parquet(path))))
   }
 
   /** Streaming SEARCH ingest — the BM25 artifact's live admission path,
     * completing the ingest symmetry across the three serving tiers
     * (near-dup, ANN, search). Each micro-batch of NEW documents runs the
-    * per-doc postings aggregate OVER THE BATCH ONLY and lands as its own
-    * `segDir/batch=<id>/` segment: `postings/` first, then the 1-row
-    * `stats/` (n_docs, total_len) LAST as the segment-completeness
-    * marker — a crash between the two leaves a torn segment that
-    * serving/folding skip instead of silently skewing avg_len. Overwrite
-    * by batch id keeps replays idempotent (the segment-sink contract).
+    * per-doc postings aggregate OVER THE BATCH ONLY and lands as a
+    * segment of two parts: `postings`, then the 1-row `stats` (n_docs,
+    * total_len) as the marker part — a torn segment never skews avg_len.
     *
     * Unlike the ANN tiers there is NOTHING trained and nothing frozen:
     * postings are purely per-document and the corpus stats are
@@ -1004,8 +896,7 @@ object Streaming {
     * whole pipeline is STATELESS streaming (no watermark, no state
     * store; each doc must arrive exactly once — the caller owns
     * identity, as in every append path). Serve with
-    * [[graft.operators.Search.loadBm25IndexWithSegments]]; fold segments
-    * into the bucketed base on cadence with
+    * [[graft.operators.Search.loadBm25IndexWithSegments]]; fold with
     * [[graft.operators.Search.foldBm25Segments]] — a plain append + a
     * long-arithmetic stats merge; no retrain cadence exists because no
     * drift exists. */
@@ -1023,91 +914,35 @@ object Streaming {
     require(stream.schema.fields.exists(f => resolver(f.name, attr)),
       s"bm25IngestSink: stream has no '$attr' column " +
         s"(${stream.schema.simpleString})")
-    // fail at SINK CONSTRUCTION if the batch postings shape wouldn't
-    // match the serving table (the ivfIngestSink contract): a mismatch
-    // admits green all day and only explodes at serve (unionByName) or
-    // fold (append) time
+    // the batch postings shape against the serving table
     import org.apache.spark.sql.types.{LongType, StringType, StructField}
-    val got = Seq(StructField(idCol, idField.dataType),
-      StructField("doclen", LongType), StructField("word", StringType),
-      StructField("tf", LongType))
-    val want = spark.table(table).schema.fields
-    require(want.length == got.length && want.forall(w =>
-        got.exists(g => resolver(w.name, g.name) &&
-          w.dataType.catalogString == g.dataType.catalogString)),
-      s"bm25IngestSink batch postings shape " +
-        s"(${got.map(f => s"${f.name}:${f.dataType.catalogString}").mkString(",")}) " +
-        s"does not match serving table '$table' " +
-        s"${spark.table(table).schema.simpleString} — admitted segments " +
-        "could be neither served (unionByName) nor folded (append)")
-    require(stream.isStreaming, "bm25IngestSink needs a streaming frame")
-    val w = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val pinned = batch.persist()
-        try {
-          // empty micro-batches (source ticks) write no segment
-          if (!pinned.isEmpty) {
-            // a REPLAYED batch (crash after both writes, before the
-            // checkpoint commit) must first RETRACT its stale completion
-            // marker — overwriting postings/ while the old stats/ still
-            // stands would present a half-rewritten segment as complete
-            // to a concurrent serve/fold; with the marker gone the
-            // stats-last ordering holds on replay exactly as on first
-            // write
-            val marker = new org.apache.hadoop.fs.Path(
-              s"$segDir/batch=$id/stats")
-            val fs = marker.getFileSystem(
-              spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(marker)) fs.delete(marker, true)
-            val d = graft.operators.Search.buildBm25Index(pinned, idCol, attr)
-            d.postings.write.mode("overwrite")
-              .parquet(s"$segDir/batch=$id/postings")
-            import spark.implicits._
-            // stats LAST — the completion marker serving/folding key on
-            Seq((d.nDocs, d.totalLen)).toDF("n_docs", "total_len")
-              .write.mode("overwrite").parquet(s"$segDir/batch=$id/stats")
-          }
-        } finally pinned.unpersist()
-      }
-    startSink(spark, trigger.fold(w)(w.trigger), checkpoint, "ing")
+    Segments.requireShape(spark, "bm25IngestSink",
+      Seq(StructField(idCol, idField.dataType), StructField("doclen", LongType),
+        StructField("word", StringType), StructField("tf", LongType)), table)
+    import spark.implicits._
+    segmentSink(stream, segDir, checkpoint, trigger) { batch =>
+      val d = graft.operators.Search.buildBm25Index(batch, idCol, attr)
+      Seq("postings" -> (d.postings.write.mode("overwrite").parquet(_)),
+        "stats" -> ((path: String) =>
+          Seq((d.nDocs, d.totalLen)).toDF("n_docs", "total_len")
+            .write.mode("overwrite").parquet(path)))
+    }
   }
 
-  /** Shared idempotent-segment `foreachBatch` sink: `survivors(batch)`
-    * writes to `outDir/batch=<id>` (overwrite — a replayed batch
-    * rewrites its own segment, the lakehouse ingest contract shared with
-    * [[zOrderedSink]]). The micro-batch is persisted across the sink's
-    * passes (emptiness probe + the survivors plan re-reads it).
-    * ERASE-MARKER contract: every non-empty batch consults
-    * [[graft.operators.Layout.requireNotUnderErase]] at commit time —
-    * a segment landing inside a partition subtree under a live corpus
-    * erase fails the micro-batch LOUDLY (checkpoint replays it after
-    * the erase) instead of being silently replaced by the erase's
-    * overwrite commit. Path-depth-bounded metadata probes per batch,
-    * no data read. */
-  private def segmentSink(stream: DataFrame, outDir: String,
+  /** Start a [[graft.operators.Segments]] sink of `stream` into
+    * `segDir` through [[startSink]]: `parts(batch)` names a batch's
+    * segment parts and their writes, the marker part last. */
+  private def segmentSink(stream: DataFrame, segDir: String,
       checkpoint: Option[String],
-      write: (DataFrame, String) => Unit =
-        (df, path) => df.write.mode("overwrite").parquet(path),
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
-      (transform: DataFrame => DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(stream.isStreaming, "segmentSink needs a streaming frame")
-    val w = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val pinned = batch.persist()
-        try {
-          // empty micro-batches (source ticks) write no segment
-          if (!pinned.isEmpty) {
-            graft.operators.Layout.requireNotUnderErase(
-              batch.sparkSession, outDir)
-            write(transform(pinned), s"$outDir/batch=$id")
-          }
-        } finally pinned.unpersist()
-      }
+      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
+      parts: DataFrame => Seq[Segments.Part]): StreamingQuery = {
+    val w = Segments.writer(stream, segDir)(parts)
     startSink(stream.sparkSession, trigger.fold(w)(w.trigger), checkpoint, "seg")
   }
+
+  /** A one-part segment: `df` overwrites the batch dir. */
+  private def plain(df: DataFrame): Seq[Segments.Part] =
+    Seq("" -> (df.write.mode("overwrite").parquet(_)))
 
   /** Streaming APPROXIMATE DISTINCT per event-time window: per-window
     * HLL++ cardinality of `itemCol` — the estimator whose whole point is
@@ -1236,14 +1071,11 @@ object Streaming {
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
 
   /** Z-ordered streaming sink: every micro-batch lands as its OWN
-    * z-ordered parquet segment (`<dir>/batch=<id>/`) via
-    * [[graft.operators.Layout.writeZOrdered]] inside `foreachBatch` —
-    * ingestion produces a skip-friendly layout immediately instead of
-    * deferring all clustering to an offline rewrite. Segment dirs are
-    * keyed by batch id and written with overwrite, so a replayed batch
-    * (post-failure recovery) lands idempotently on its own directory —
-    * the foreachBatch exactly-once recipe. Per-batch stats are batch-
-    * local by construction; periodic [[graft.operators.Layout.compact]]
+    * z-ordered one-part segment ([[graft.operators.Segments]]) via
+    * [[graft.operators.Layout.writeZOrdered]] — ingestion produces a
+    * skip-friendly layout immediately instead of deferring all
+    * clustering to an offline rewrite. Per-batch stats are batch-local
+    * by construction; periodic [[graft.operators.Layout.compact]]
     * (zOrderCols mode) merges accreted segments into table-wide
     * clustering — the standard ingest-then-compact lakehouse cadence.
     *
@@ -1251,18 +1083,11 @@ object Streaming {
     * an extra int `batch` column (deliberate hive-style naming: the
     * root reads as one table and the column is segment provenance) —
     * anything that must preserve the stream's own schema, compaction
-    * included, should drop it or read `<dir>/batch=*` directly.
-    *
-    * The micro-batch is persisted across the sink's passes (emptiness
-    * probe, zValue stats aggregate, optional string-dict collect, the
-    * write) — foreachBatch re-executes the batch plan from the source
-    * for every action otherwise. Pass a durable `checkpoint` for
-    * anything longer-lived than a test. */
+    * included, should drop it or read `<dir>/batch=*` directly. Pass a
+    * durable `checkpoint` for anything longer-lived than a test. */
   def zOrderedSink(stream: DataFrame, dir: String, zCols: Seq[String],
       filesPerBatch: Int = 4,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    segmentSink(stream, dir, checkpoint,
-      write = (df, path) =>
-        graft.operators.Layout.writeZOrdered(df, path, zCols, filesPerBatch)
-    )(identity)
+    segmentSink(stream, dir, checkpoint)(batch => Seq("" ->
+      (graft.operators.Layout.writeZOrdered(batch, _, zCols, filesPerBatch))))
 }

@@ -392,11 +392,12 @@ object ScaleSmoke {
             delta.filter(col("doc_id") % 8 === b), "doc_id", "text")
           val pinned = d.postings.persist()
           segRows += pinned.count()
-          pinned.write.mode("overwrite").parquet(s"$segDir/batch=$b/postings")
+          val seg = graft.operators.Segments.dir(segDir, b)
+          pinned.write.mode("overwrite").parquet(s"$seg/postings")
           pinned.unpersist()
           import spark.implicits._
           Seq((d.nDocs, d.totalLen)).toDF("n_docs", "total_len")
-            .write.mode("overwrite").parquet(s"$segDir/batch=$b/stats")
+            .write.mode("overwrite").parquet(s"$seg/stats")
         }
         val t0 = System.nanoTime()
         Search.foldBm25Segments(spark, tbl, segDir)
@@ -428,7 +429,7 @@ object ScaleSmoke {
             .withColumn("cluster", graft.functions.VectorExpressions
               .nearest_centroid_cos(col("embedding"), centroids))
             .write.mode("overwrite").partitionBy("cluster")
-            .parquet(s"$isegDir/batch=$b")
+            .parquet(graft.operators.Segments.dir(isegDir, b))
         }
         val t1 = System.nanoTime()
         Similarity.foldIvfSegments(spark, itbl, isegDir)

@@ -446,8 +446,7 @@ object StateProbe {
           trigger = pacing(throttled), blocklist = Some(blocklist))
       }
       val (before, replay, total) = killAndRestart(8, start)
-      val segs = Option(new java.io.File(out).list()).toSeq.flatten
-        .count(_.startsWith("batch="))
+      val segs = graft.operators.Segments.batches(spark, out).size
       val survivors = spark.read.parquet(out).count()
       println(f"""{"probe":"restart_ingest","k":$k,""" +
         f""""batches_before_kill":$before,""" +
@@ -497,8 +496,7 @@ object StateProbe {
           trigger = pacing(throttled))
       }
       val (before, replay, total) = killAndRestart(8, start)
-      val segs = Option(new java.io.File(segDir).list()).toSeq.flatten
-        .count(_.startsWith("batch="))
+      val segs = graft.operators.Segments.batches(spark, segDir).size
       val served = Search.loadBm25IndexWithSegments(spark, table, segDir)
       val fullIdx = Search.buildBm25Index(full, "doc_id", "text")
       println(f"""{"probe":"restart_bm25","k":$k,""" +
@@ -557,8 +555,7 @@ object StateProbe {
           trigger = pacing(throttled))
       }
       val (before, replay, total) = killAndRestart(8, start)
-      val segs = Option(new java.io.File(segDir).list()).toSeq.flatten
-        .count(_.startsWith("batch="))
+      val segs = graft.operators.Segments.batches(spark, segDir).size
       // content parity: every projection's (id, bucket) set over
       // base ∪ segments must equal a full rebuild's (deterministic
       // hyperplanes make this exact)
@@ -609,8 +606,7 @@ object StateProbe {
           trigger = pacing(throttled))
       }
       val (before, replay, total) = killAndRestart(8, start)
-      val segs = Option(new java.io.File(segDir).list()).toSeq.flatten
-        .count(_.startsWith("batch="))
+      val segs = graft.operators.Segments.batches(spark, segDir).size
       val served = Similarity.loadPqIndexWithSegments(spark, table, segDir)
       val expect = full.filter(col("embedding").isNotNull).count()
       println(f"""{"probe":"restart_pq","k":$k,""" +
@@ -655,8 +651,7 @@ object StateProbe {
           trigger = pacing(throttled))
       }
       val (before, replay, total) = killAndRestart(8, start)
-      val segs = Option(new java.io.File(segDir).list()).toSeq.flatten
-        .count(_.startsWith("batch="))
+      val segs = graft.operators.Segments.batches(spark, segDir).size
       val served = Sketch.rollupDistinct(
           Sketch.loadCubeWithSegments(spark, table, segDir), Seq("source"))
         .collect()

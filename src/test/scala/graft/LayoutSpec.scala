@@ -452,6 +452,31 @@ class LayoutSpec extends SparkSpec {
           Layout.requireNotUnderErase(spark, s"$bLoc/ingest_segments")
         }
         Layout.requireNotUnderErase(spark, "/tmp/graft-test/elsewhere")
+        // an ARTIFACT segment sink under the fence fails its batch just
+        // as loudly, and writes no segment
+        val bm25 = "layout_erase_marker_bm25"
+        Seq(bm25, s"${bm25}_stats").foreach(Sources.replaceTable(spark, _))
+        val docs = Seq((1L, "alpha beta"), (2L, "gamma delta"))
+          .toDF("doc_id", "text")
+        graft.operators.Search.saveBm25Index(
+          graft.operators.Search.buildBm25Index(docs, "doc_id", "text"), bm25)
+        val in = java.nio.file.Files.createTempDirectory("graft-erase-bm25-")
+        docs.write.mode("overwrite").parquet(in.toString)
+        val segDir = s"$bLoc/bm25_segments"
+        val q = graft.streaming.Streaming.bm25IngestSink(
+          spark.readStream.schema(docs.schema).parquet(in.toString), bm25,
+          "doc_id", "text", segDir)
+        val fenced = try intercept[
+            org.apache.spark.sql.streaming.StreamingQueryException](
+          q.processAllAvailable()) finally q.stop()
+        assert(Iterator.iterate[Throwable](fenced)(_.getCause)
+          .takeWhile(_ != null)
+          .exists(c => String.valueOf(c.getMessage).contains("under a live erase")),
+          s"the fenced batch must name the erase: $fenced")
+        val segPath = new org.apache.hadoop.fs.Path(segDir)
+        assert(!segPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(new org.apache.hadoop.fs.Path(segPath, "batch=0")),
+          "the fenced batch wrote a segment")
         // an append into an UNaffected partition proceeds mid-erase
         Layout.appendPartitionedRows(spark, table,
           Seq((8L, 80, "a")).toDF("id", "v", "part"))

@@ -917,8 +917,18 @@ class StreamingSpec extends SparkSpec {
     try q.processAllAvailable() finally q.stop()
     assert(q.recentProgress.count(_.numInputRows > 0) >= 3,
       "need a genuine multi-batch admission")
+    // an UNCOMMITTED segment (data files landed, job commit's _SUCCESS
+    // not yet written) must be skipped by serve AND fold
+    delta.filter(col("vec_id") === 0)
+      .withColumn("vec_id", col("vec_id") + 1000000L)
+      .withColumn("cluster", nearest_centroid_cos(col("embedding"),
+        Similarity.loadIvfIndex(spark, table).centroids))
+      .write.mode("overwrite").partitionBy("cluster")
+      .parquet(s"$segDir/batch=998")
+    assert(new java.io.File(s"$segDir/batch=998/_SUCCESS").delete())
     val served = Similarity.loadIvfIndexWithSegments(spark, table, segDir)
-    assert(served.assigned.count() == emb.count(), "admission lost rows")
+    assert(served.assigned.count() == emb.count(),
+      "admission lost rows or admitted the uncommitted segment")
     // every row — base AND streamed segments — assigned by the SAME
     // frozen centroids (what makes the fold a plain append)
     val mismatches = served.assigned.filter(col("cluster") =!=
@@ -939,12 +949,13 @@ class StreamingSpec extends SparkSpec {
     // fold: plain append of already-assigned rows, then the segment dir
     // is gone and the base-only serving ranks identically
     Similarity.foldIvfSegments(spark, table, segDir)
-    // the fold deletes exactly the batch dirs it read — the segment
-    // ROOT stays, ready for the next admission (and so a batch landing
-    // concurrently would survive)
+    // the fold deletes exactly the complete batch dirs it read — the
+    // segment ROOT stays, ready for the next admission (and so a batch
+    // landing concurrently would survive), and so does the uncommitted one
     val leftover = new java.io.File(segDir).list()
-    assert(leftover != null && !leftover.exists(_.startsWith("batch=")),
-      s"fold left batch segments: ${leftover.mkString(",")}")
+    assert(leftover != null && leftover.toSet == Set("batch=998"),
+      s"fold should delete exactly the complete segments: " +
+        s"${leftover.mkString(",")}")
     val folded = Similarity.loadIvfIndex(spark, table)
     assert(folded.assigned.count() == emb.count(), "fold lost rows")
     assert(top(folded) == servedTop, "fold changed the served ranking")
@@ -987,6 +998,14 @@ class StreamingSpec extends SparkSpec {
     delta.limit(5).select(col("doc_id"), lit(7L).as("doclen"),
         lit("tornword").as("word"), lit(1L).as("tf"))
       .write.mode("overwrite").parquet(torn.toString)
+    // an UNCOMMITTED segment (stats data files landed, their _SUCCESS
+    // not yet written) must be skipped by serve AND fold
+    delta.limit(5).select(col("doc_id"), lit(7L).as("doclen"),
+        lit("uncommittedword").as("word"), lit(1L).as("tf"))
+      .write.mode("overwrite").parquet(s"$segDir/batch=998/postings")
+    Seq((5L, 35L)).toDF("n_docs", "total_len")
+      .write.mode("overwrite").parquet(s"$segDir/batch=998/stats")
+    assert(new java.io.File(s"$segDir/batch=998/stats/_SUCCESS").delete())
     val served = Search.loadBm25IndexWithSegments(spark, table, segDir)
     val full = Search.buildBm25Index(docs, "doc_id", "text")
     // content identity: stats merged bit-exactly, postings row-for-row
@@ -997,7 +1016,8 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
           r.getLong(3))).toSet
     assert(rows(served.postings) == rows(full.postings),
-      "served postings diverge from a rebuild (or admitted a torn segment)")
+      "served postings diverge from a rebuild (or admitted a torn or " +
+        "uncommitted segment)")
     def top(idx: Search.Bm25Index) =
       Search.searchBm25(docs, idx, "doc_id", "hash join filter", k = 25)
         .select(col("doc_id"), col("bm25_rank"))
@@ -1005,11 +1025,12 @@ class StreamingSpec extends SparkSpec {
     val servedTop = top(served)
     assert(servedTop == top(full), "served ranking != full-rebuild ranking")
     // fold: plain bucketed append + long-arithmetic stats merge; the
-    // complete batch dirs are gone, the torn one is left for its replay,
-    // and the base-only serving is content-identical to the rebuild
+    // complete batch dirs are gone, the torn and uncommitted ones are
+    // left for their replays, and the base-only serving is
+    // content-identical to the rebuild
     Search.foldBm25Segments(spark, table, segDir)
     val leftover = new java.io.File(segDir).list()
-    assert(leftover != null && leftover.toSet == Set("batch=999"),
+    assert(leftover != null && leftover.toSet == Set("batch=998", "batch=999"),
       s"fold should delete exactly the complete segments: " +
         s"${leftover.mkString(",")}")
     val folded = Search.loadBm25Index(spark, table)
@@ -1068,6 +1089,16 @@ class StreamingSpec extends SparkSpec {
       .withColumn("bucket", lit(0L))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$segDir/batch=999/t0")
+    // an UNCOMMITTED segment (every projection's data files landed, the
+    // last projection's _SUCCESS not yet written) must be skipped by
+    // serve AND fold; a fresh id for the query's own vector would tie
+    // it at the top of the ranking if admitted
+    (0 until 3).foreach(t => delta.filter(col("vec_id") === 0)
+      .withColumn("vec_id", col("vec_id") + 1000000L)
+      .withColumn("bucket", Similarity.codeColumn(col("embedding"), 64, 8, t))
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(s"$segDir/batch=998/t$t"))
+    assert(new java.io.File(s"$segDir/batch=998/t2/_SUCCESS").delete())
     def top(f: => org.apache.spark.sql.DataFrame) =
       f.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val servedTop = top(Similarity.lshTopKServedWithSegments(spark, table,
@@ -1076,12 +1107,13 @@ class StreamingSpec extends SparkSpec {
       "vec_id", "embedding", qvec, 20, probeDist = 4))
     assert(servedTop == rebTop,
       "base+segments ranking diverges from the full rebuild " +
-        "(or a torn segment was admitted)")
+        "(or a torn or uncommitted segment was admitted)")
     // fold: per-projection bucket-partitioned appends; content equals
-    // the rebuild per (vec_id, bucket); torn segment left for replay
+    // the rebuild per (vec_id, bucket); torn and uncommitted segments
+    // left for replay
     Similarity.foldLshSegments(spark, table, segDir)
     val leftover = new java.io.File(segDir).list()
-    assert(leftover != null && leftover.toSet == Set("batch=999"),
+    assert(leftover != null && leftover.toSet == Set("batch=998", "batch=999"),
       s"fold should delete exactly the complete segments: " +
         s"${leftover.mkString(",")}")
     (0 until 3).foreach { t2 =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Warm steady-state timing of every gate; prints one JSON line. A
   * crashed gate's stack trace also goes to `<outDir>/failures.jsonl`
   * (`outDir` = the first argument, else the working directory). */
@@ -8,12 +7,7 @@ object Bench {
     val outDir = args.headOption.getOrElse(".")
     GateFailures.reset(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.rocksDbState(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.harness("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JVM/codegen/classloading would otherwise be billed
     // entirely to whichever query happens to run first.

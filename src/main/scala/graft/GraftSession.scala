@@ -47,6 +47,22 @@ object GraftSession {
     // either way.
     .config("spark.sql.join.preferSortMergeJoin", "false")
 
+  /** The session every gate runner builds on (Verify, Bench, AuditPlans,
+    * the specs and the tool mains): [[rocksDbState]] on `local[n]` with
+    * `n` shuffle partitions, UTC session time and no UI, where `n` is
+    * `SPARK_GRAFT_CPUS`, else the core count. Add confs to the returned
+    * builder, then `getOrCreate()`. */
+  def harness(appName: String): SparkSession.Builder = {
+    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    rocksDbState(SparkSession.builder()
+      .appName(appName)
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+  }
+
   /** Apply the recommended configs to a builder. */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = b
     // AQE re-plans at runtime: coalesces small shuffle partitions,

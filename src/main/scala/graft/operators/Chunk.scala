@@ -37,9 +37,9 @@ object Chunk {
     * path), so CacheManager would hand the regenerated frame the
     * PRE-regeneration blocks. Each slot therefore also carries a SOURCE
     * FINGERPRINT — the sorted (input file, mtime) list, the
-    * `Queries.artifactTable` idiom — and a fingerprint change releases
-    * the previous pin even when `sameResult` holds, forcing the fresh
-    * persist down the recompute path.
+    * `graft.gates.Fixtures.artifactTable` idiom — and a fingerprint
+    * change releases the previous pin even when `sameResult` holds,
+    * forcing the fresh persist down the recompute path.
     *
     * Slots are keyed by the SparkSession OBJECT (not its identity hash
     * — a hash collision between two sessions would alias their slots),

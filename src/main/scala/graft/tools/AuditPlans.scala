@@ -6,6 +6,8 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExecBase
 
+import graft.gates.{Budget, Gate, Gates}
+
 /** Plan red-flag sweep across every registered query: counts exchanges
   * and flags cartesian products / nested-loop joins / non-codegen spans
   * so scale regressions surface as a diff, not a bench surprise.
@@ -27,378 +29,24 @@ object AuditPlans {
       error.nonEmpty || flags.exists(f => !f.contains("[expected"))
   }
 
-  /** Streaming queries need a streaming sink to plan; audited via their
-    * batch-equivalent plans and the streaming specs instead. */
-  val skipExec: Set[String] = Set("q_stream_tumbling", "q_stream_sliding",
-    "q_stream_stateful", "q_stream_dedup", "q_stream_funnel")
+  private val budgets: Map[String, Budget] =
+    Gates.all.collect { case (n, Gate(_, b: Budget, _)) => n -> b }
 
-  /** Pinned shuffle-exchange counts per query (static plan, sf0.001,
-    * AQE off): the shuffle BUDGET each operator is designed to spend. A
-    * mismatch fails PlanAuditSpec — an extra Exchange is how a scale
-    * regression sneaks in while row counts stay green (and a missing one
-    * usually means a broadcast silently replaced a co-located join, which
-    * deserves a deliberate pin update, not an unnoticed drift). Update a
-    * value ONLY with a plan diff in hand.
-    *
-    * Ordinal-backed queries (q_rank/q_slice/q_batched/q_groupby_runs)
-    * grew +1/+2 visible exchanges when Ordinals moved from RDD
-    * zipWithIndex to the pure-Catalyst bucketed-window idiom: the RDD
-    * path's createDataFrame severed lineage, so its sort shuffle ran in
-    * a separate invisible job — the plan didn't have fewer shuffles, the
-    * audit just couldn't see them. Now the whole lineage is one plan. */
-  val expectedShuffles: Map[String, Int] = Map(
-    "q1_agg" -> 2, "q_approx_distinct" -> 3, "q_batched" -> 3,
-    "q_cap_per_source" -> 2, "q_chunk_windows" -> 1, "q_cluster_best" -> 3,
-    // q_cms_counts 2 → 3: the CMS serve became a lazy in-plan aggregate
-    // (global agg = +1 single-partition exchange of ONE sketch row)
-    // instead of a driver-side collect-and-relit
-    "q_cms_counts" -> 3, "q_compute_field" -> 1, "q_contamination" -> 3,
-    "q_csv_roundtrip" -> 1, "q_csv_string" -> 1, "q_cube" -> 2,
-    "q_curation_funnel" -> 1, "q_decontam_bloom" -> 3,
-    "q_decontam_fuzzy" -> 4, "q_dedup_cluster" -> 2,
-    "q_dedup_embedding" -> 2, "q_dedup_exact" -> 2, "q_dedup_minhash" -> 5,
-    "q_dedup_semantic" -> 6,
-    // zorder 3 → 2: the per-file stats aggregate (grouped by input file)
-    // runs once into a localCheckpoint-pinned frame that serves both the
-    // band cutoff and the skip gate, so its exchange is no longer in the
-    // audited plan; left: the gate row's single-partition aggregate + the
-    // output ORDER BY (plans/r18/q_zorder_layout_*)
-    "q_zorder_layout" -> 2,
-    "q_dedup_ngram" -> 3, "q_dedup_remove" -> 2, "q_dedup_simhash" -> 5,
-    "q_delete" -> 2, "q_embed_normalize" -> 1, "q_embed_quantize" -> 1,
-    "q_excel_dates" -> 1, "q_excel_roundtrip" -> 1, "q_except" -> 2,
-    "q_fingerprint" -> 1, "q_fixedwidth" -> 1, "q_format" -> 1,
-    "q_frame_sample" -> 2, "q_gopher_rules" -> 1, "q_groupby_runs" -> 5,
-    "q_groupby_summaries" -> 2, "q_heavy_hitters" -> 3,
-    // rrf and borda: the BM25 side's 4 (the q_search_bm25 shape); both
-    // fused lists leave their retrievers in one partition, so the fused
-    // id-keyed aggregate needs no exchange; every fused frame is
-    // top-N-bounded. 9 → 4 when searchBm25 dropped its range sort and
-    // the top-k's shuffles (plans/r19/q_hybrid_{rrf,borda}_*)
-    "q_hybrid_rrf" -> 4, "q_hybrid_borda" -> 4,
-    // eval: retriever lists are checkpoint-pinned; three bounded
-    // qrels-hit aggregates and the ideal-DCG TakeOrdered account for
-    // the budget. 5 → 4: the fused aggregate over the two one-partition
-    // lists lost its exchange (plans/r19/q_rank_eval_*)
-    "q_rank_eval" -> 4,
-    // batch retrieval: the single-query shape + the workload-sized
-    // qterms/words distincts and the (query, doc)-keyed score aggregate;
-    // the ranking window partitions BY QUERY (no global exchange beyond
-    // the k-row outputs)
-    "q_search_bm25_batch" -> 11,
-    // batch eval: the batch-retrieval shape + the query-keyed hit/ideal/
-    // total aggregates and their per-query joins (workload-sized)
-    "q_rank_eval_batch" -> 13,
-    // hard-negative mining: the batch-retrieval shape + the per-(query,
-    // id) positives anti-join and the per-query re-rank window, both on
-    // the top-50-bounded frame
-    "q_hard_negatives" -> 13,
-    // batch hybrid: the lexical batch shape + the vector batch's
-    // broadcast workload x corpus scan and the per-query fused
-    // aggregate/ranking (all query-keyed)
-    "q_hybrid_rrf_batch" -> 16,
-    // composed takedown eval: two checkpoint-pinned retriever lists +
-    // q_rank_eval's bounded hit/ideal metric aggregates, twice; the
-    // extra exchange over q_rank_eval's 5 is saved by having no fusion
-    "q_rank_eval_takedown" -> 3,
-    // batch ANN recall gates: the serve path's and the exact side's
-    // per-query ranking windows (query-keyed, k-row state), the
-    // per-(query,id) semi-join of the containment check on each side,
-    // and the output ORDER BY — all keyed or k-bounded, no corpus-global
-    // exchange; the LSH gate adds the cross-projection dedup, the PQ
-    // gate the candidate-window leg. 10/13/11 → 5/6/6: the exact side is
-    // one bruteForceTopKBatch plan instead of a per-query TakeOrdered
-    // union (plans/r18/q_sim_{ivf,lsh,pq}_batch_*)
-    "q_sim_ivf_batch" -> 5, "q_sim_lsh_batch" -> 6,
-    "q_sim_pq_batch" -> 6,
-    // filtered search: predicate + ranking ride the scan (TakeOrdered /
-    // broadcast semi-join; no exchange at audit scale)
-    "q_sim_filtered" -> 0, "q_sim_ivf_filtered" -> 0,
-    // maxsim: one token-scan + per-doc hash-aggregate (partial/final =
-    // 1 visible exchange); the batch adds the (query,doc)-keyed agg,
-    // the per-query ranking window, and the output ORDER BY
-    "q_sim_maxsim" -> 1, "q_sim_maxsim_batch" -> 3,
-    // mmr: the audited plan starts at the greedy loop's RDD boundary
-    // (createDataFrame severs lineage — the Ordinals caveat above), so
-    // the visible 1 is the output ORDER BY; the retriever's exchanges
-    // are q_sim_topk-batch-shaped and the repartition-by-query is
-    // workload-keyed on the top-N-bounded candidate frame
-    "q_mmr_rerank" -> 1,
-    "q_intersect" -> 2,
-    // prune gates: fact-side groupBy agg + final sort; the dim/threshold
-    // sides are broadcast (dynamic) or literal (static)
-    "q_partition_prune" -> 2, "q_partition_prune_dynamic" -> 2,
-    "q_partition_prune_multi" -> 2,
-    "q_join3_revenue" -> 1, "q_join_anti" -> 1, "q_join_asof" -> 2,
-    "q_join_chain" -> 2, "q_join_full" -> 3, "q_join_inner" -> 2,
-    "q_join_left" -> 2, "q_join_multikey" -> 3, "q_join_range" -> 1,
-    "q_join_right" -> 2, "q_join_salted" -> 2, "q_join_semi" -> 1,
-    "q_json_roundtrip" -> 1, "q_lang_id" -> 1, "q_length_buckets" -> 2,
-    "q_line_dedup" -> 3, "q_bpe_pairs" -> 3, "q_shard_assign" -> 3,
-    "q_classifier_score" -> 1,  // inference is map-side; the 1 is the output ORDER BY
-    "q_dsir_scores" -> 7, "q_weighted_sample" -> 0,
-    // 2× ensureParallelism (train+score legs) + C₂ agg + C₁ agg +
-    // per-doc groupBy + output ORDER BY; both model joins broadcast
-    "q_lm_score" -> 6,
-    // ensureParallelism + window-key agg + the reused window-keyed
-    // confirm-join exchange + per-doc removed-set agg + output ORDER BY
-    // 6 → 5 with the r8 window-explode performance cache: the confirm
-    // join's probe side reads the cached explode instead of re-planning
-    // its own exchange
-    "q_substr_dedup" -> 5,
-    // cube-sized aggregates: one-hop rollup (1) + two-hop rollup (2) +
-    // corpus exact distinct (2: partial/final count_distinct) + the
-    // final orderBy range exchange — the CORPUS is scanned once, for
-    // the exact side only; the serve paths touch just the cube table
-    "q_sketch_rollup" -> 6,
-    // same serve shape over the upserted-then-compacted cube
-    "q_sketch_compact" -> 6,
-    // same serve shape over the takedown-rebuilt cube (exact side scans
-    // the reduced corpus)
-    "q_sketch_delete" -> 6,
-    // one-hop rollup over base ∪ segments (2) + corpus exact distinct
-    // (partial/final) — no two-hop leg in this gate
-    "q_stream_sketch_ingest" -> 4,
-    // merge rollup over the cube (1) + the grouped rank check over the
-    // broadcast-joined corpus (partial/final fold into one visible
-    // exchange at audit scale) + the orderBy exchange
-    "q_quantile_rollup" -> 3,
-    // bucketed-window exchange (the two-level prefix sum) + output
-    // ORDER BY; the per-bucket prefix frame joins broadcast
-    "q_token_budget" -> 2,
-    // scan is map-side; the 1 is the output ORDER BY
-    "q_encoding_scan" -> 1,
-    // boundary math + chunk explode are map-side; the 1 is the ORDER BY
-    "q_cdc_chunks" -> 1,
-    // histogram agg + histogram-window exchange + output ORDER BY; the
-    // join back and the tie window reuse the histogram exchange
-    "q_top_fraction" -> 3,
-    // ensureParallelism-free variant of the q_top_fraction shape with an
-    // intra-cell cumsum leg: histogram agg + histogram-window exchange +
-    // straddle-cell window exchange + output ORDER BY
-    "q_budget_per_group" -> 4,
-    // the audited static plan is the tiny learned-merge-table localToDF
-    // + output ORDER BY (1 visible exchange); the per-round vocab aggs
-    // run inside bpeTrain's driver loop as separate bounded jobs
-    "q_bpe_train" -> 1,
-    // encode is ONE map-side nested-replace pass over documents; the 1
-    // is the output ORDER BY (training jobs run in bpeTrain's driver
-    // loop, as for q_bpe_train)
-    "q_bpe_apply" -> 1,
-    // same map-side encode pass as q_bpe_apply, emitting the token
-    // stream + decode instead of counts; the 1 is the output ORDER BY
-    "q_bpe_roundtrip" -> 1,
-    // one map-side pass through the codegen rank-loop encoder; the 1 is
-    // the output ORDER BY
-    "q_bpe_apply_deep" -> 1,
-    // same audited shape as q_bpe_train: the KB-scale symbol table
-    // localToDF + output ORDER BY; vocab aggregate runs in the driver
-    // loop's bounded job
-    "q_bpe_vocab" -> 1,
-    // same audited shape as q_bpe_train: the merge table (89-ish rows
-    // after the corpus drains) localToDF + output ORDER BY — merge
-    // depth never changes the audited plan, which is the point
-    "q_bpe_train_deep" -> 1,
-    // the 1100-row learned-merge table localToDF + output ORDER BY —
-    // the 48-copy widening and the 1100 training rounds all run inside
-    // bpeTrain's bounded driver-loop jobs, exactly as q_bpe_train_deep
-    "q_bpe_train_vocab_depth" -> 1,
-    // the gate RETURNS a batch read of the memory sink (the streaming
-    // subtree run happens before the audited plan): sink scan → groupBy
-    // came pre-aggregated in the sink → the one range exchange is the
-    // output ORDER BY
-    "q_stream_partition_prune" -> 1,
-    // q_lm_score minus one leg: train filters the SAME ensureParallelism
-    // scan (en slice), so 2× leg + C₂ + C₁ + per-doc groupBy + output
-    // ORDER BY = 6, unchanged from q_lm_score; model joins broadcast
-    "q_lm_score_cross" -> 6,
-    // node-set distinct + outdeg agg + edge-degree join exchange +
-    // 3 × per-round groupBy(dst) + output ORDER BY; the per-round rank
-    // joins broadcast at this SF, the node/edge frames are persisted
-    "q_pagerank" -> 7,
-    // five-stage funnel in one plan: dedup window (content key) + cap
-    // window (source) + budget bucket-window + pack bucket-window +
-    // output ORDER BY — one exchange each, filters fused into the scan
-    "q_pipeline_e2e" -> 5,
-    // existing-key DISTINCT agg + output ORDER BY; the anti-join
-    // broadcasts at this SF (shuffles on the digest at scale)
-    "q_dedup_incremental" -> 2,
-    "q_mix_weighted" -> 2, "q_mix_temperature" -> 5, "q_multimodal_features" -> 1,
-    "q_multimodal_meta" -> 1, "q_orderby_limit" -> 0, "q_pack_index" -> 2, "q_pack_sequences" -> 3,
-    "q_parse_timedelta" -> 2, "q_pii_redact" -> 1, "q_pivot_3level" -> 5,
-    "q_pivot_counts" -> 3, "q_pivot_sum" -> 3, "q_pivot_totals" -> 2,
-    "q_profile" -> 2, "q_quality_score" -> 1, "q_quantile_band" -> 2,
-    "q_rank" -> 1, "q_repetition" -> 1, "q_rollup" -> 2,
-    "q_sample_stratified" -> 2,
-    // in-memory index: the postings build's (id, doclen, word) aggregate
-    // and the lazy stats aggregate (partial/final each); the search
-    // itself runs in one partition, so it adds none (8 → 4,
-    // plans/r19/q_search_bm25_*)
-    "q_search_bm25" -> 4,
-    // saved-artifact serves: the term-filtered postings fit one scan
-    // split, so df window, per-doc sum and top-k run in the scan's task
-    // and the fetch sorts within one partition — no exchange (2 → 0,
-    // plans/r19/q_search_bm25_{serve,upsert,compact,catchup}_*)
-    "q_search_bm25_serve" -> 0, "q_search_bm25_upsert" -> 0,
-    "q_search_bm25_compact" -> 0, "q_search_bm25_catchup" -> 0,
-    // delete: the serve shape behind the broadcast tombstone anti-join,
-    // which dedups nothing (3 → 0, plans/r19/q_search_bm25_delete_*)
-    "q_search_bm25_delete" -> 0,
-    // segment-resident delete: the masked serve over base ∪ segment
-    // postings, coalesced like the base (4 → 0,
-    // plans/r19/q_search_bm25_delete_seg_*)
-    "q_search_bm25_delete_seg" -> 0,
-    // the e2e composition: the post-reclaim mask-free serve (0) + the
-    // admitted-segment suppression aggregate + the raw-file erasure
-    // aggregate (partial/final); both gate joins are one-row broadcasts,
-    // and the output ORDER BY of one-row joins over the one-partition
-    // serve needs no exchange (5 → 3, plans/r19/q_takedown_e2e_*)
-    "q_takedown_e2e" -> 3,
-    // corpus erasure: per-source agg (partial/final) over the served
-    // table + the raw-file erasure aggregate's single-partition leg +
-    // output ORDER BY folded into the final exchange
-    "q_corpus_erase" -> 3,
-    // the corpus-erase e2e composition: the three one-row gate
-    // aggregates' single-partition legs (corpus-file erasure, index-file
-    // erasure, suppression) + the fingerprint-keyed aggregate leg; the
-    // rebuilt-index BM25 serve coalesces its fetch (the partitioned
-    // corpus table is analyzed at build, so it fits one split) and the
-    // output ORDER BY sorts within the serve's one partition (6 → 5,
-    // plans/r19/q_corpus_erase_e2e_*; 5 → 4, plans/r20/q_corpus_erase_e2e_*)
-    "q_corpus_erase_e2e" -> 4,
-    // reclaim: tombstones consumed at compaction — the serve plan is
-    // mask-free again, back to the base serve shape (2 → 0)
-    "q_search_bm25_reclaim" -> 0,
-    // streaming-ingested segments served beside the base: the base
-    // serve shape (3 → 0, plans/r19/q_stream_bm25_ingest_*)
-    "q_stream_bm25_ingest" -> 0, "q_search_minscore" -> 4,
-    "q_search_scored" -> 4, "q_select_computed" -> 1,
-    "q_session_window" -> 2, "q_shuffle" -> 1, "q_sim_ivf" -> 0, "q_sim_ivf_serve" -> 0,
-    "q_sim_lsh" -> 1, "q_sim_lsh_serve" -> 1,
-    "q_sim_pq" -> 0, "q_sim_pq_serve" -> 0,
-    "q_sim_topk" -> 0, "q_slice" -> 1,
-    "q_span_dedup" -> 3, "q_split_hash" -> 1, "q_splitby" -> 2,
-    "q_stats" -> 1, "q_stream_enrich" -> 1, "q_stream_join" -> 2,
-    // memory-sink scan + batch exact count_distinct (2: partial/final)
-    // + the join/orderBy share — the streamed agg ran before the plan
-    "q_stream_approx_distinct" -> 3,
-    // events-side rank-check aggregate + the orderBy exchange; the
-    // streamed sketch table broadcasts into the corpus-side join
-    "q_stream_quantiles" -> 2,
-    // the near-dedup gates RETURN a batch read of the segment sink (the
-    // streaming work runs before the audited plan): scan → select →
-    // global orderBy = the one range exchange
-    "q_stream_neardedup" -> 1, "q_stream_neardedup_serve" -> 1,
-    // the audited batch plan is the segment read-back + output ORDER BY
-    // (the masked-index join runs inside the streaming query, whose
-    // per-batch shape q_stream_neardedup_serve's pin already covers)
-    "q_stream_neardedup_delete" -> 1,
-    // the returned frame is the segment read-back + survivor-invariant
-    // projection + ORDER BY (1 range exchange); the streaming pipeline
-    // itself ran to completion in its own query, audited by StreamingSpec
-    "q_stream_ingest_e2e" -> 1, "q_stream_ingest_blocklist" -> 1,
-    // build+upsert run as side-effect jobs (k-means aggs, partitioned
-    // writes); the returned frame is exact-top10 semi-join ann-candidates
-    // with both sides broadcast-sized at sf0.001 → zero visible exchanges.
-    // lsh_upsert's 1 = the served candidates' dropDuplicates(vec_id)
-    // across the three unioned table probes
-    "q_sim_ivf_upsert" -> 0, "q_sim_ivf_compact" -> 0,
-    "q_sim_ivf_catchup" -> 0,
-    // ANN takedown gates: the k-row ANN side is localCheckpoint'd (the
-    // leak gate aggregates it twice), so the audited plan is the exact
-    // side + two tiny joins — the serve shapes are audited by the base
-    // gates (q_sim_ivf/lsh/pq and their _serve variants)
-    "q_sim_ivf_delete" -> 0, "q_sim_ivf_reclaim" -> 0,
-    "q_sim_lsh_delete" -> 0, "q_sim_pq_delete" -> 0,
-    "q_sim_lsh_reclaim" -> 0, "q_sim_pq_reclaim" -> 0,
-    "q_sim_lsh_upsert" -> 1, "q_sim_lsh_compact" -> 1,
-    "q_sim_lsh_catchup" -> 1,
-    "q_sim_pq_upsert" -> 0, "q_sim_pq_compact" -> 0,
-    "q_sim_pq_catchup" -> 0,
-    // ingest gates serve base ∪ segment unions; the one exchange in the
-    // LSH shape is the served candidates' cross-table dropDuplicates
-    "q_stream_lsh_ingest" -> 1, "q_stream_pq_ingest" -> 0,
-    "q_stream_ivf_ingest" -> 0,
-    "q_tail" -> 0, "q_tfidf_top" -> 5, "q_token_count" -> 1,
-    "q_topk_per_group" -> 2, "q_tsv_roundtrip" -> 1, "q_typed_dataset" -> 2,
-    "q_udaf_summaries" -> 2, "q_union_all" -> 2, "q_unique_first" -> 2,
-    "q_vocab_top" -> 3, "q_where_comparators" -> 1, "q_window_running" -> 2,
-    "q_zip_import" -> 1)
+  /** Gates audited by the streaming specs instead: they need a streaming
+    * sink to plan. */
+  val skipExec: Set[String] = Gates.all.keySet -- budgets.keySet
+
+  /** Each batch gate's pinned shuffle budget ([[Budget.shuffles]]). */
+  val expectedShuffles: Map[String, Int] = budgets.map { case (n, b) => n -> b.shuffles }
 
   /** BNLJs that are part of the design, with why they are scale-safe. */
-  val expectedBnlj: Map[String, String] = Map(
-    "q_search_bm25" ->
-      "corpus-constants join: build side is exactly ONE broadcast row (the in-memory index's lazy stats aggregate) crossed onto the term-filtered postings, a map-side column append per posting",
-    "q_hybrid_rrf" ->
-      "corpus-constants join (q_search_bm25's shape, on the lexical retriever): ONE broadcast stats row crossed onto the term-filtered postings",
-    "q_hybrid_borda" ->
-      "corpus-constants join (q_search_bm25's shape, on the lexical retriever): ONE broadcast stats row crossed onto the term-filtered postings",
-    "q_search_bm25_batch" ->
-      "corpus-constants join: build side is exactly ONE broadcast row (the in-memory index's lazy stats aggregate) crossed onto the per-term idf frame, which is bounded by the query workload's distinct terms",
-    "q_rank_eval_batch" ->
-      "corpus-constants join (q_search_bm25_batch's shape): ONE broadcast stats row onto the term-bounded idf frame",
-    "q_hard_negatives" ->
-      "corpus-constants join (q_search_bm25_batch's shape): ONE broadcast stats row onto the term-bounded idf frame",
-    "q_hybrid_rrf_batch" ->
-      "batch ANN scoring: build side is the broadcast QUERY WORKLOAD (3 vectors; workload-sized by design), streamed side one corpus scan — every (row, query) pair scores map-side; the brute-force baseline the bucketed ANN families replace when selectivity matters",
-    "q_sim_ivf_batch" ->
-      "batch exact side (q_hybrid_rrf_batch's bruteForceTopKBatch shape): build side is the broadcast 3-query WORKLOAD, streamed side one corpus scan",
-    "q_sim_lsh_batch" ->
-      "batch exact side (q_hybrid_rrf_batch's bruteForceTopKBatch shape): build side is the broadcast 3-query WORKLOAD, streamed side one corpus scan",
-    "q_sim_pq_batch" ->
-      "batch exact side (q_hybrid_rrf_batch's bruteForceTopKBatch shape): build side is the broadcast 3-query WORKLOAD, streamed side one corpus scan",
-    "q_rank_eval" ->
-      "metric assembly joins: each build side is exactly ONE broadcast row (the ideal-DCG aggregate and the qrels total) crossed onto the one-row hit aggregate",
-    "q_rank_eval_takedown" ->
-      "metric assembly joins (q_rank_eval's shape, twice): each build side is exactly ONE broadcast row (ideal-DCG aggregate, qrels total) crossed onto the one-row hit aggregate of the pre- and post-takedown evals",
-    "q_sim_maxsim_batch" ->
-      "batch MaxSim scoring: build side is the broadcast QUERY WORKLOAD (3 sliced query-token bags; workload-sized by design), streamed side one token-table scan — every (token row, query) pair scores map-side; the late-interaction member of the batch family",
-    "q_dedup_embedding" ->
-      "verification-grade exact all-pairs; LSH banding is the scale path",
-    "q_dedup_semantic" ->
-      "recall-floor gate join: build side is exactly ONE broadcast row (the verification-grade all-pairs exact side is materialized once, outside this plan)",
-    "q_zorder_layout" ->
-      "skip-bound gate join: build side is exactly ONE broadcast row (the per-file stats aggregate)",
-    "q_mix_temperature" ->
-      "realization gate join: build side is exactly ONE broadcast row (the per-source tolerance check)",
-    "q_pivot_3level" ->
-      "pivot key-lattice grid: product of two broadcast DISTINCT-KEY sets, bounded by pivot-key cardinality",
-    "q_quantile_band" ->
-      "quantile thresholds: build side is exactly ONE broadcast row (the [lo,hi] aggregate), so the 'nested loop' is a map over the stream side",
-    "q_cms_counts" ->
-      "CMS serve join: build side is exactly ONE broadcast row (the sketch aggregate), probed by a bounded candidate list",
-    "q_sim_ivf_delete" ->
-      "takedown leak gate: build side is exactly ONE broadcast row (the deleted-id count over the k-row ANN result)",
-    "q_sim_ivf_reclaim" ->
-      "takedown leak gate: build side is exactly ONE broadcast row (the deleted-id count over the k-row ANN result)",
-    "q_sim_lsh_delete" ->
-      "takedown leak gate: build side is exactly ONE broadcast row (the deleted-id count over the k-row ANN result)",
-    "q_sim_pq_delete" ->
-      "takedown leak gate: build side is exactly ONE broadcast row (the deleted-id count over the k-row ANN result)",
-    "q_sim_lsh_reclaim" ->
-      "takedown leak gate: build side is exactly ONE broadcast row (the deleted-id count over the k-row ANN result)",
-    "q_sim_pq_reclaim" ->
-      "takedown leak gate: build side is exactly ONE broadcast row (the deleted-id count over the k-row ANN result)",
-    "q_takedown_e2e" ->
-      "suppression + erasure gates: each build side is exactly ONE broadcast row (the admitted-blocked count and the raw-file dead-id count)",
-    "q_corpus_erase" ->
-      "erasure gate: build side is exactly ONE broadcast row (the affected partitions' raw-file doomed-id count)",
-    "q_corpus_erase_e2e" ->
-      "erasure + suppression gates: each build side is exactly ONE broadcast row (corpus-file doomed-id count, index-file doomed-id count, admitted-blocked count)")
+  val expectedBnlj: Map[String, String] =
+    budgets.flatMap { case (n, b) => b.bnlj.map(n -> _) }
 
   /** Unpartitioned windows that are part of the design, with why their
     * single partition is bounded (never the corpus). */
-  val expectedGlobalWindow: Map[String, String] = Map(
-    "q_weighted_sample" ->
-      "sample_rank runs AFTER .limit(k): the window's one partition holds exactly k rows",
-    "q_hybrid_rrf" ->
-      "both windows rank top-N-bounded frames: the cosine rank after .limit(50), rrf_rank after .limit(25)",
-    "q_hybrid_borda" ->
-      "every window ranks or counts a top-N-bounded frame: the cosine rank after .limit(50), each list's in-plan size count over that top-50 list (Fusion.borda's input contract), borda_rank after .limit(25)",
-    "q_rank_eval" ->
-      "both windows rank bounded frames: the ideal-DCG window AFTER .limit(k) over qrels, rrf_rank after .limit(25); the retriever lists are localCheckpoint-pinned",
-    "q_rank_eval_takedown" ->
-      "every window ranks a bounded frame: the two evals' hit-index windows run over rank<=25-filtered rankings and their ideal-DCG windows AFTER .limit(25) over qrels; the pre/post retriever lists are localCheckpoint-pinned")
+  val expectedGlobalWindow: Map[String, String] =
+    budgets.flatMap { case (n, b) => b.globalWindow.map(n -> _) }
 
   /** Count DISTINCT shuffle-exchange instances (by object identity),
     * descending into InMemoryRelation cached plans: a pinned subtree
@@ -437,21 +85,21 @@ object AuditPlans {
     * AQE OFF — AQE wraps plans in AdaptiveSparkPlan(isFinalPlan=false),
     * hiding codegen spans from the string check. */
   def sweep(spark: SparkSession, sfDir: String): Seq[AuditRow] =
-    graft.Queries.all.toSeq.sortBy(_._1).collect {
-      case (name, fn) if !skipExec.contains(name) =>
+    Gates.all.values.toSeq.sortBy(_.name).collect {
+      case g @ Gate(name, budget: Budget, _) =>
         try {
-          val exec = fn(spark, sfDir).queryExecution.executedPlan
+          val exec = g.build(spark, sfDir).queryExecution.executedPlan
           val plan = exec.toString
           val bnljFlag =
             if (!plan.contains("BroadcastNestedLoopJoin")) None
-            else expectedBnlj.get(name) match {
+            else budget.bnlj match {
               case Some(why) => Some(s"BNLJ[expected: $why]")
               case None => Some("BNLJ")
             }
           val gw = countGlobalWindows(exec)
           val gwFlag =
             if (gw == 0) None
-            else expectedGlobalWindow.get(name) match {
+            else budget.globalWindow match {
               case Some(why) => Some(s"GLOBAL-WINDOW[expected: $why]")
               case None => Some(s"GLOBAL-WINDOW[$gw]")
             }
@@ -477,12 +125,10 @@ object AuditPlans {
       names: Seq[String]): Unit = {
     val dir = java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(outDir))
-    names.foreach { name =>
-      val fn = graft.Queries.all.getOrElse(name,
-        throw new IllegalArgumentException(s"no registered query '$name'"))
-      val qe = fn(spark, sfDir).queryExecution
-      java.nio.file.Files.writeString(dir.resolve(s"${name}_$tag.txt"),
-        s"-- $name: shuffles=${countShuffles(qe.executedPlan)} " +
+    Gates.named(names).foreach { g =>
+      val qe = g.build(spark, sfDir).queryExecution
+      java.nio.file.Files.writeString(dir.resolve(s"${g.name}_$tag.txt"),
+        s"-- ${g.name}: shuffles=${countShuffles(qe.executedPlan)} " +
           s"global-windows=${countGlobalWindows(qe.executedPlan)}\n" +
           qe.explainString(org.apache.spark.sql.execution.FormattedMode))
     }
@@ -490,14 +136,10 @@ object AuditPlans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.harness("graft-audit-plans").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // static plans, as PlanAuditSpec audits them
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     args.drop(1) match {
       case Array(outDir, tag, names) =>
         dump(spark, sfDir, outDir, tag, names.split(",").toSeq)

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the marquee claim of the rank-loop BPE encoder: per-word
@@ -12,9 +11,7 @@ import org.apache.spark.sql.functions._
   * warm pass; run: `sbt "runMain graft.tools.BpeDepthProbe"`. */
 object BpeDepthProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = graft.GraftSession.harness("graft-bpe-depth-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val copies = 48

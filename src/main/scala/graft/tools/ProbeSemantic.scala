@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -16,11 +15,7 @@ object ProbeSemantic {
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .appName("graft-probe-semantic").master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.harness("graft-probe-semantic").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     for (dir <- dirs) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark: raw scan cost of a bucket-partitioned serving dir
@@ -10,10 +9,7 @@ import org.apache.spark.sql.functions._
 object ProfScan {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.harness("graft-prof-scan").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def time(label: String)(f: => Any): Unit = {
       val t0 = System.nanoTime(); val r = f

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -18,12 +17,7 @@ object ProfStages {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val name = if (args.length > 1) args(1) else "q_dedup_simhash"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.rocksDbState(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.GraftSession.harness("graft-prof-stages").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println("conf openCostInBytes=" +
       spark.sessionState.conf.filesOpenCostInBytes)
@@ -60,7 +54,7 @@ object ProfStages {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    val fn = graft.Queries.all(name)
+    val fn = graft.gates.Gates(name).build
     // warm: codegen/JIT/AQE + once-per-generation artifact builds
     try fn(spark, sfDir).count() catch { case e: Throwable =>
       println(s"WARM-FAIL: ${e.getMessage}") }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming-state diagnostics: runs one stateful gate's stream and
   * prints every batch's stateOperators metrics (RocksDB load/commit
   * walls), so state-store overhead separates from query compute.
@@ -10,12 +8,8 @@ object ProfStream {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val name = if (args.length > 1) args(1) else "q_stream_approx_distinct"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.rocksDbState(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.props.getOrElse("graft.prof.localdir", "/tmp")))
+    val spark = graft.GraftSession.harness("graft-prof-stream")
+      .config("spark.local.dir", sys.props.getOrElse("graft.prof.localdir", "/tmp"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -33,7 +27,7 @@ object ProfStream {
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(listener)
-    val fn = graft.Queries.all(name)
+    val fn = graft.gates.Gates(name).build
     fn(spark, sfDir).count() // warm
     val t0 = System.nanoTime()
     fn(spark, sfDir).count()

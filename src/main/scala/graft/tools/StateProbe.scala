@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
@@ -99,12 +99,7 @@ object StateProbe {
     require(probes.nonEmpty, s"empty probe list (known: $knownProbes)")
     require((probes -- knownProbes).isEmpty,
       s"unknown probes: ${probes -- knownProbes} (known: $knownProbes)")
-    val spark = graft.GraftSession.rocksDbState(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.GraftSession.harness("graft-state-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val events = graft.sources.EventTime.normalizeTs(

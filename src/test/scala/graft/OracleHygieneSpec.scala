@@ -2,12 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Oracle-SQL hygiene tripwires for the parity rules documented at the top
-  * of Queries.scala. The general typed-divergence gate is tools/check.py's
-  * TYPE-MISMATCH comparison (Arrow types, integer widths normalized,
-  * decimals distinct — mirrors the driver's type-sensitive hash); these
-  * tests pin the specific DuckDB-HUGEINT trap that caused the three-round
-  * q_pack_index hash-red so it cannot regress silently.
+/** Oracle-SQL hygiene tripwires for the parity rules documented on the
+  * gate registry, [[graft.gates.Gates]]. The general typed-divergence
+  * gate is tools/check.py's TYPE-MISMATCH comparison (Arrow types,
+  * integer widths normalized, decimals distinct — mirrors the driver's
+  * type-sensitive hash); these tests pin the specific DuckDB-HUGEINT trap
+  * that caused the three-round q_pack_index hash-red so it cannot regress
+  * silently.
   */
 class OracleHygieneSpec extends AnyFunSuite {
 

@@ -5,9 +5,9 @@ import graft.tools.AuditPlans
 /** The plan-audit tripwire, wired into `sbt test`: every registered batch
   * query's static plan must be free of unexplained red flags (cartesian
   * products, non-whitelisted nested-loop joins, no-codegen plans). If a
-  * new operator introduces a deliberate BNLJ, it must be added to
-  * `AuditPlans.expectedBnlj` with a scale-safety justification — this
-  * test is what keeps that whitelist honest. */
+  * new operator introduces a deliberate BNLJ, its gate's `Budget` must
+  * carry a `bnlj` scale-safety justification — this test is what keeps
+  * those whitelists honest. */
 class PlanAuditSpec extends SparkSpec {
 
   test("plan sweep has zero unexplained red flags") {
@@ -32,13 +32,9 @@ class PlanAuditSpec extends SparkSpec {
     // Exchange is a scale regression that row counts won't catch; a
     // missing one is a plan change that deserves a deliberate pin update
     val drift = rows.flatMap { r =>
-      AuditPlans.expectedShuffles.get(r.name) match {
-        case Some(want) if want != r.shuffles =>
-          Some(s"${r.name}: shuffles=${r.shuffles}, pinned $want")
-        case Some(_) => None
-        case None => Some(s"${r.name}: no shuffle budget pinned " +
-          "(add it to AuditPlans.expectedShuffles with the plan in hand)")
-      }
+      val want = AuditPlans.expectedShuffles(r.name)
+      if (want == r.shuffles) None
+      else Some(s"${r.name}: shuffles=${r.shuffles}, pinned $want")
     }
     val problems = bad ++
       stale.toSeq.sorted.map(n => s"$n: whitelisted BNLJ no longer planned") ++

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 
+import graft.gates.Gates
+
 /** Scan-level efficiency contracts, pinned: filters REACH the parquet
   * scan (PushedFilters) and projections PRUNE it (ReadSchema) on the
   * canonical gates. At 100 TB these two properties are the difference
@@ -33,7 +35,7 @@ class PushdownSpec extends SparkSpec {
 
   test("q1_agg: the lineitem scan reads 7 of 16 columns and pushes the " +
       "shipdate predicate into the parquet reader") {
-    val sc = scanOf(Queries.all("q1_agg")(spark, dir), "lineitem")
+    val sc = scanOf(Gates("q1_agg").build(spark, dir), "lineitem")
     assert(sc.requiredSchema.fieldNames.toSet == Set(
       "l_shipdate", "l_returnflag", "l_linestatus", "l_quantity",
       "l_extendedprice", "l_discount", "l_tax"),
@@ -44,7 +46,7 @@ class PushdownSpec extends SparkSpec {
 
   test("q_where_comparators: every comparator-DSL predicate lands in " +
       "PushedFilters and the projection prunes the scan") {
-    val sc = scanOf(Queries.all("q_where_comparators")(spark, dir), "lineitem")
+    val sc = scanOf(Gates("q_where_comparators").build(spark, dir), "lineitem")
     assert(sc.requiredSchema.fieldNames.toSet == Set(
       "l_orderkey", "l_linenumber", "l_quantity", "l_discount",
       "l_returnflag", "l_shipdate"),
@@ -58,7 +60,7 @@ class PushdownSpec extends SparkSpec {
 
   test("q_join3_revenue: the dim filter pushes into the customer scan " +
       "and both fact scans are column-pruned") {
-    val df = Queries.all("q_join3_revenue")(spark, dir)
+    val df = Gates("q_join3_revenue").build(spark, dir)
     val cust = scanOf(df, "customer")
     // whereEq compiles to null-safe equality → EqualNullSafe pushdown
     assert(pushed(cust).contains("EqualNullSafe(c_mktsegment,BUILDING)") ||
@@ -77,7 +79,7 @@ class PushdownSpec extends SparkSpec {
 
   test("documents pipeline scans are pruned: q_gopher_rules reads only " +
       "the text/id columns it scores") {
-    val sc = scanOf(Queries.all("q_gopher_rules")(spark, dir), "documents")
+    val sc = scanOf(Gates("q_gopher_rules").build(spark, dir), "documents")
     val read = sc.requiredSchema.fieldNames.toSet
     assert(read.size <= 3 && read.contains("text"),
       s"documents ReadSchema widened: $read")

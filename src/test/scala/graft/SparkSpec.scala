@@ -3,18 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one per JVM via getOrCreate).
-  * Streaming state runs under RocksDB — the same backend a deployment
-  * uses — so the stateful-operator suites exercise the real store. */
+/** Shared local session for all suites (one per JVM via getOrCreate):
+  * the gate harness session ([[GraftSession.harness]]), so streaming
+  * state runs under RocksDB — the same backend a deployment uses — and
+  * the stateful-operator suites exercise the real store. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = GraftSession.rocksDbState(
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false"))
+  lazy val spark: SparkSession = GraftSession.harness("graft-test")
+    .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
     .getOrCreate()
 
   /** Snapshot `keys` and restore them after `body` — including the

@@ -317,7 +317,7 @@ object Layout {
     *     (a live-ingest append landing mid-erase) are re-admitted into
     *     the overwrite minus the doomed ids — the same basis/diff
     *     discipline every staged artifact promote carries
-    *     ([[graft.sources.Sources.writeBuildBasis]]). The remaining
+    *     ([[graft.operators.Generations]]). The remaining
     *     race — an append committing into an affected partition while
     *     the overwrite JOB itself is running, which dynamic overwrite
     *     would silently replace — is ENFORCED away for the library's

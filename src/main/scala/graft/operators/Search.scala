@@ -331,8 +331,7 @@ object Search {
     val pinned = delta.persist()
     try {
       val d = buildBm25Index(pinned, idCol, attr)
-      d.postings.write.mode("append").format("parquet")
-        .bucketBy(buckets, "word").sortBy("word").saveAsTable(table)
+      appendPostings(d.postings, table, buckets)
       val (n2, total2) = (n + d.nDocs, total + d.totalLen)
       val avg2 = if (n2 == 0) 0.0 else total2.toDouble / n2
       // the fold ledger and reclaim token ride through: an upsert
@@ -341,6 +340,12 @@ object Search {
       writeStats(spark, table, n2, avg2, buckets, total2, folded, token)
     } finally pinned.unpersist()
   }
+
+  /** Append postings rows into `table` under its pinned bucket spec. */
+  private def appendPostings(postings: DataFrame, table: String,
+      buckets: Int): Unit =
+    postings.write.mode("append").format("parquet")
+      .bucketBy(buckets, "word").sortBy("word").saveAsTable(table)
 
   /** The (n_docs, buckets, total_len, folded-batch ledger) of an
     * upsert-capable artifact — the one place the mergeable-schema guard
@@ -373,12 +378,9 @@ object Search {
     * spec — one shuffle, no postings recompute, no corpus access, and
     * (unlike the ANN tiers' compactions) nothing to retrain, so the
     * rewritten generation is row-identical by construction. Stats are
-    * untouched — compaction changes layout, never content. The new
-    * layout is built in full under `<table>__next` while the live
-    * postings keep serving ([[graft.operators.Similarity
-    * .compactIvfIndex]]'s discipline), then promoted by a metadata-only
-    * catalog rename ([[graft.sources.Sources.promoteTable]]) — a failed
-    * rewrite never touched the live generation.
+    * untouched — compaction changes layout, never content. A staged
+    * generation ([[Generations]]): the live postings keep serving until
+    * the metadata-only swap.
     *
     * `dedupExact` additionally drops exact-duplicate postings rows —
     * the documented recovery from a fold retry that double-appended a
@@ -392,118 +394,53 @@ object Search {
     promoteBm25Layout(spark, table)
   }
 
-  /** Build the NEXT postings layout beside the live one — the long half
-    * of [[compactBm25Index]], runnable any time: the rewrite is pinned
-    * to the file set listed at entry (the basis discipline shared with
-    * [[graft.operators.Similarity.buildNextIvfGeneration]] — a
-    * concurrent [[upsertBm25Index]] cannot race the rewrite's scan; its
-    * postings are COPIED into the staged layout at the promote instead
-    * of vanishing at the swap), one shuffle into the pinned bucket spec
-    * under `<table>__next`, basis committed LAST. A failed rewrite
-    * leaves the live generation untouched. */
+  /** The long half of [[compactBm25Index]] ([[Generations.buildNext]]):
+    * one shuffle into the pinned bucket spec. RECLAIM: the rewrite drops
+    * the tombstoned documents, so the promoted generation's files no
+    * longer CONTAIN them (physical erasure, not just masking). */
   def buildNextBm25Layout(spark: org.apache.spark.sql.SparkSession,
       table: String, dedupExact: Boolean = false): Unit = {
     val buckets = readMergeableStats(spark, table)._2
-    val next = s"${table}__next"
-    val files = graft.sources.Sources.tableDataFiles(spark, table)
-    // RECLAIM: the rewrite filters out the tombstoned documents present
-    // at entry — the promoted generation's files no longer CONTAIN them
-    // (physical erasure, not just masking) — and records the consumed
-    // tombstone files + a build token in the basis so the promote can
-    // subtract exactly their (n, Σlen) from the live stats, exactly
-    // once. Deletes issued mid-build stay in the residual tombstone set.
-    val tombFiles = graft.operators.Tombstones.snapshotFiles(spark, table)
-    try {
-      val content0 =
-        if (files.isEmpty) spark.table(table)
-        else spark.read.parquet(files: _*)
-      val content =
-        graft.operators.Tombstones.maskByFiles(spark, content0, tombFiles)
+    val a = Generations.Artifact(table, Seq(table))
+    Generations.buildNext(spark, a) { b =>
+      val content = b.input(0)
       graft.sources.Sources.writeBucketed(
         graft.core.GTable(if (dedupExact) content.distinct() else content),
-        next, Seq("word"), buckets)
-      graft.sources.Sources.writeBuildBasis(spark, s"${next}_basis",
-        files.map(0 -> _), "", "", tombFiles = tombFiles,
-        token = java.util.UUID.randomUUID().toString)
-    } catch {
-      case e: Throwable =>
-        graft.sources.Sources.replaceTable(spark, next)
-        graft.sources.Sources.replaceTable(spark, s"${next}_basis")
-        throw e
+        a.staged(0), Seq("word"), buckets)
     }
   }
 
-  /** Promote a fully-built staged postings layout — the short half of
-    * [[compactBm25Index]]: postings files upserted into the live table
-    * since the build's basis snapshot are COPIED into the staged layout
-    * (postings rows are purely per-document — nothing re-derives; their
-    * stats already merged into the live `_stats` sibling, which the
-    * promote never touches, so corpus constants stay consistent by
-    * construction), the basis commits the consumed files (a crashed
-    * retry skips them), then the metadata-only swap. Catch-up rows skip
-    * a `dedupExact` build's distinct — they are fresh admissions, not
-    * historic double-folds. Streaming segments need no catch-up:
-    * segment postings are generation-independent; serve keeps unioning
-    * them and the fold merges them later, unchanged. */
+  /** The short half of [[compactBm25Index]] ([[Generations.promote]]):
+    * the catch-up COPIES postings upserted mid-build (postings rows are
+    * purely per-document, and their stats already merged into the live
+    * `_stats` sibling; they skip a `dedupExact` build's distinct — fresh
+    * admissions, not historic double-folds). Streaming segments need no
+    * catch-up: their postings are generation-independent.
+    *
+    * Before the swap, the consumed tombstones' (n, Σlen) is subtracted
+    * from the live stats — the one in-place mutation of a promote,
+    * guarded by the build token so a rerun never subtracts twice. The
+    * serve windows between it and the retire are the between-promotes
+    * class: constants momentarily doubly corrected while the consumed
+    * entries still mask; rows stay correct throughout, one rerun heals. */
   def promoteBm25Layout(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
-    val next = s"${table}__next"
-    val basisTable = s"${next}_basis"
-    // the basis is dropped LAST, so staged-gone + basis-present means a
-    // previous promote crashed after its swap: RESUME the post-swap
-    // steps (token-guarded, so nothing re-applies) instead of failing.
-    // Rerun-to-completion is the contract (as in PromoteSpec's windows):
-    // a stale consumed-tombstone basis left unhealed would double-count
-    // at the NEXT build's snapshot.
-    val resume = !spark.catalog.tableExists(next) &&
-      spark.catalog.tableExists(basisTable)
-    require(spark.catalog.tableExists(next) || resume,
-      s"no staged layout to promote for '$table' — run " +
-        "buildNextBm25Layout (or compactBm25Index) first")
-    val (consumedTomb, buildToken) =
-      graft.sources.Sources.readBasisReclaim(spark, basisTable)
-    if (!resume)
-      graft.sources.Sources.readBuildBasis(spark, basisTable)
-        .foreach { case (basis, _, _) =>
-          val delta = graft.sources.Sources.tableDataFiles(spark, table)
-            .filterNot(f => basis.contains((0, f)))
-          if (delta.nonEmpty) {
-            val buckets = readMergeableStats(spark, table)._2
-            spark.read.parquet(delta: _*)
-              .write.mode("append").format("parquet")
-              .bucketBy(buckets, "word").sortBy("word").saveAsTable(next)
-            graft.sources.Sources.writeBuildBasis(spark, basisTable,
-              (basis ++ delta.map(0 -> _)).toSeq, "", "",
-              tombFiles = consumedTomb, token = buildToken)
-          }
+    val a = Generations.Artifact(table, Seq(table))
+    Generations.promote(spark, a,
+      admit = (_, rows, _) => appendPostings(rows, a.staged(0),
+        readMergeableStats(spark, table)._2),
+      preSwap = basis => if (basis.tombFiles.nonEmpty) {
+        val (n, buckets, total, folded, token) = readMergeableStats(spark, table)
+        if (token != basis.token) {
+          val tombDf = spark.read.parquet(basis.tombFiles: _*)
+          val agg = tombDf.dropDuplicates(tombDf.columns.head)
+            .agg(count(lit(1)), coalesce(sum(col("doclen")), lit(0L))).head()
+          val (n2, total2) = (n - agg.getLong(0), total - agg.getLong(1))
+          writeStats(spark, table, n2,
+            if (n2 == 0) 0.0 else total2.toDouble / n2, buckets, total2,
+            foldedBatches = folded, reclaimToken = basis.token)
         }
-    // RECLAIM, step 1 — subtract the consumed tombstones' (n, Σlen)
-    // from the live stats, guarded by the build token so a promote
-    // retry can never subtract twice (the one in-place mutation of this
-    // promote; everything else swaps). The serve windows between here
-    // and step 3 are the standard between-promotes class: constants
-    // momentarily doubly-corrected while consumed entries still sit in
-    // the tombstone sibling — rows stay correct throughout (masked
-    // before the swap, physically absent after) and one rerun heals.
-    if (consumedTomb.nonEmpty) {
-      val (n, buckets, total, folded, token) = readMergeableStats(spark, table)
-      if (token != buildToken) {
-        val tombDf = spark.read.parquet(consumedTomb: _*)
-        val agg = tombDf.dropDuplicates(tombDf.columns.head)
-          .agg(count(lit(1)), coalesce(sum(col("doclen")), lit(0L))).head()
-        val (n2, total2) = (n - agg.getLong(0), total - agg.getLong(1))
-        writeStats(spark, table, n2,
-          if (n2 == 0) 0.0 else total2.toDouble / n2, buckets, total2,
-          foldedBatches = folded, reclaimToken = buildToken)
-      }
-    }
-    // step 2 — the metadata-only generation swap
-    if (!resume) graft.sources.Sources.promoteTable(spark, next, table)
-    // step 3 — retire the consumed tombstones; mid-build deletes stay
-    // residual (still masked at serve, reclaimed next cadence)
-    if (consumedTomb.nonEmpty)
-      graft.operators.Tombstones.retireConsumed(spark, table, consumedTomb)
-    graft.sources.Sources.replaceTable(spark, basisTable)
+      })
   }
 
   /** Load the BM25 index over base table ∪ streaming-admitted segments
@@ -572,9 +509,8 @@ object Search {
       table: String, segDir: String): Unit = {
     lazy val (n, buckets, total, ledger, token) = readMergeableStats(spark, table)
     graft.operators.Segments.fold(spark, segDir, "stats", ledger.toSet) { todo =>
-      spark.read.parquet(todo.map(d => s"$d/postings"): _*)
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "word").sortBy("word").saveAsTable(table)
+      appendPostings(spark.read.parquet(todo.map(d => s"$d/postings"): _*),
+        table, buckets)
       segmentStats(spark, todo, n, total)
     } { case ((n2, total2), present) =>
       writeStats(spark, table, n2,

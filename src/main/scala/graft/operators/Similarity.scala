@@ -324,119 +324,46 @@ object Similarity {
     * deterministic, so content is already rebuild-identical; compaction
     * changes layout, never content). `repartition(bucket)` collapses
     * each bucket's accumulated files into one before the partitioned
-    * write. Built under `<proj>__next` while the live projection keeps
-    * serving, promoted by a metadata-only rename
-    * ([[graft.sources.Sources.promoteTable]]); a failed rewrite never
-    * touched the live generation. */
+    * write. A staged generation ([[Generations]]): every projection is
+    * built before any swaps, so no window serves projections of
+    * different generations. */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
     buildNextLshLayout(spark, table)
     promoteLshLayout(spark, table)
   }
 
-  /** Build the NEXT LSH layout generation beside the live projections —
-    * the long half of [[compactLshIndex]], runnable any time: every
-    * projection's rewrite is pinned to the file set listed at entry
-    * (the [[buildNextIvfGeneration]] basis discipline — a concurrent
-    * [[upsertLshIndex]] cannot race the rewrite's scan), ALL staged
-    * projections are built before any promote (no window where the
-    * projections serve different generations), and the basis commits
-    * LAST so a torn build degrades to the plain swap. A failed build
-    * leaves the live layout untouched. */
+  private def lshArtifact(spark: org.apache.spark.sql.SparkSession,
+      table: String): Generations.Artifact =
+    Generations.Artifact(table,
+      (0 until lshMetaFor(spark, table)._2).map(t => s"${table}_t$t"))
+
+  /** The long half of [[compactLshIndex]] ([[Generations.buildNext]]). */
   def buildNextLshLayout(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
-    val (_, tables, _) = lshMetaFor(spark, table)
-    val basis = Seq.newBuilder[(Int, String)]
-    // RECLAIM: one tombstone snapshot covers every projection's rewrite
-    // (the sibling keys on the artifact prefix) — the promoted layout's
-    // files no longer contain the deleted ids in ANY projection
-    val tombFiles = graft.operators.Tombstones.snapshotFiles(spark, table)
-    try {
-      for (t <- 0 until tables) {
-        val live = s"${table}_t$t"
-        val next = s"${live}__next"
-        val files = graft.sources.Sources.tableDataFiles(spark, live)
-        val loc = graft.sources.Sources.tableLocationOf(spark, live)
-        basis ++= files.map(t -> _)
-        graft.sources.Sources.replaceTable(spark, next)
-        val input =
-          if (files.isEmpty) spark.table(live)
-          else graft.sources.Sources.conformTo(
-            spark.read.option("basePath", loc).parquet(files: _*),
-            spark.table(live).schema)
-        graft.operators.Tombstones.maskByFiles(spark, input, tombFiles)
-          .repartition(col("bucket"))
+    val a = lshArtifact(spark, table)
+    Generations.buildNext(spark, a) { b =>
+      for (p <- a.parts.indices) {
+        graft.sources.Sources.replaceTable(spark, a.staged(p))
+        b.input(p).repartition(col("bucket"))
           .write.format("parquet")
-          .options(graft.sources.Sources.stagedWriteOptions(spark, next))
-          .partitionBy("bucket").saveAsTable(next)
+          .options(graft.sources.Sources.stagedWriteOptions(spark, a.staged(p)))
+          .partitionBy("bucket").saveAsTable(a.staged(p))
       }
-      graft.sources.Sources.writeBuildBasis(spark,
-        s"${table}__next_basis", basis.result(), "", "",
-        tombFiles = tombFiles)
-    } catch {
-      case e: Throwable =>
-        for (t <- 0 until tables)
-          graft.sources.Sources.replaceTable(spark, s"${table}_t${t}__next")
-        graft.sources.Sources.replaceTable(spark, s"${table}__next_basis")
-        throw e
     }
   }
 
-  /** Promote a fully-built staged LSH layout — the short half of
-    * [[compactLshIndex]]: per projection, files upserted into the live
-    * layout since the build's basis snapshot are COPIED into the staged
-    * generation (hyperplanes are deterministic, so the rows — bucket
-    * codes included — are exactly what a rebuild would assign; nothing
-    * re-hashes), the basis commits the consumed files (a crashed retry
-    * skips them), then every projection swaps by metadata-only rename.
-    * A projection whose staged table is already gone (a rerun after a
-    * crash mid-swap) skips its catch-up and resumes the swap via
-    * [[graft.sources.Sources.promoteTable]]'s resume path. Streaming
-    * segments need no catch-up here: their codes are generation-
-    * independent, so serve keeps unioning them and the fold merges them
-    * later, unchanged. */
+  /** The short half of [[compactLshIndex]] ([[Generations.promote]]):
+    * the catch-up COPIES each projection's mid-build files (bucket codes
+    * are what a rebuild would assign; nothing re-hashes). Streaming
+    * segments need no catch-up: their codes are generation-independent,
+    * so serve keeps unioning them and the fold merges them later. */
   def promoteLshLayout(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
-    val (_, tables, _) = lshMetaFor(spark, table)
-    val basisTable = s"${table}__next_basis"
-    graft.sources.Sources.readBuildBasis(spark, basisTable).foreach {
-      case (basis, _, _) =>
-        val consumed = Seq.newBuilder[(Int, String)]
-        for (t <- 0 until tables) {
-          val live = s"${table}_t$t"
-          val next = s"${live}__next"
-          if (spark.catalog.tableExists(next)) {
-            val loc = graft.sources.Sources.tableLocationOf(spark, live)
-            val delta = graft.sources.Sources.tableDataFiles(spark, live)
-              .filterNot(f => basis.contains((t, f)))
-            if (delta.nonEmpty) {
-              graft.sources.Sources.conformTo(
-                spark.read.option("basePath", loc).parquet(delta: _*),
-                spark.table(live).schema)
-                .write.mode("append").format("parquet")
-                .partitionBy("bucket").saveAsTable(next)
-              consumed ++= delta.map(t -> _)
-            }
-          }
-        }
-        val c = consumed.result()
-        if (c.nonEmpty) {
-          // preserve the build's reclaim half across the rewrite
-          val (tombFiles, token) =
-            graft.sources.Sources.readBasisReclaim(spark, basisTable)
-          graft.sources.Sources.writeBuildBasis(spark, basisTable,
-            (basis ++ c).toSeq, "", "", tombFiles = tombFiles,
-            token = token)
-        }
-    }
-    val (consumedTomb, _) =
-      graft.sources.Sources.readBasisReclaim(spark, basisTable)
-    for (t <- 0 until tables)
-      graft.sources.Sources.promoteTable(spark, s"${table}_t${t}__next",
-        s"${table}_t$t")
-    // retire consumed tombstones (promoteIvfGeneration's discipline)
-    graft.operators.Tombstones.retireConsumed(spark, table, consumedTomb)
-    graft.sources.Sources.replaceTable(spark, basisTable)
+    val a = lshArtifact(spark, table)
+    Generations.promote(spark, a, admit = (p, rows, _) =>
+      rows.write.mode("append").format("parquet")
+        .partitionBy("bucket").saveAsTable(a.staged(p)))
   }
 
   /** All `bits`-bit codes within Hamming distance `d` of `code` —
@@ -708,10 +635,7 @@ object Similarity {
     // retrain/promote rewrote the encoded rows too
     val centroids = graft.sources.Sources.stamped(spark,
       cachesFor(spark).centroids, table, s"${table}_centroids",
-      alsoRefresh = Seq(table)) {
-      spark.table(s"${table}_centroids").orderBy(col("cluster")).collect()
-        .map(_.getSeq[Double](1).toArray)
-    }
+      alsoRefresh = Seq(table))(centroidsOf(spark, s"${table}_centroids"))
     // takedown masking: tombstoned ids anti-join out map-side; identity
     // when no tombstones exist (the cluster-pruned plan is unchanged)
     IvfIndex(graft.operators.Tombstones.mask(spark, table,
@@ -740,14 +664,17 @@ object Similarity {
     * tier exists for exactly that); re-upserting the same delta doubles
     * its rows. Null vectors are dropped, as in [[ivfIndex]]. */
   def upsertIvfIndex(delta: DataFrame, idCol: String, vecCol: String,
-      table: String): Unit = {
-    val spark = delta.sparkSession
-    val centroids = loadIvfIndex(spark, table).centroids
+      table: String): Unit = appendAssigned(delta, vecCol,
+    loadIvfIndex(delta.sparkSession, table).centroids, table)
+
+  /** Assign `rows` to their nearest of `centroids`, append into `t`. */
+  private def appendAssigned(rows: DataFrame, vecCol: String,
+      centroids: Array[Array[Double]], t: String): Unit = {
     val v = col(vecCol)
-    delta.filter(v.isNotNull)
+    rows.filter(v.isNotNull)
       .withColumn("cluster", nearestCentroidCos(v, centroids))
       .write.mode("append").format("parquet")
-      .partitionBy("cluster").saveAsTable(table)
+      .partitionBy("cluster").saveAsTable(t)
   }
 
   /** RETRAIN-on-cadence compaction for the IVF artifact — the closing
@@ -759,10 +686,9 @@ object Similarity {
     * [[graft.streaming.Streaming.compactNearDedupIndex]]: upsert against
     * frozen centroids all day; compact; the new generation serves
     * tomorrow. A compaction IS a full re-cluster + rewrite by definition
-    * — that cost moves to the cadence, off the ingest path. The next
-    * generation is built in full under `<table>__next` while the live
-    * artifact keeps serving, then promoted by a metadata-only catalog
-    * rename ([[graft.sources.Sources.promoteTable]]). */
+    * — that cost moves to the cadence, off the ingest path. A staged
+    * generation ([[Generations]]): the live artifact keeps serving until
+    * the metadata-only swaps. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, idCol: String, vecCol: String,
       iters: Int = 3, segDir: Option[String] = None): IvfIndex = {
@@ -785,160 +711,45 @@ object Similarity {
     promoteIvfGeneration(spark, table, segDir)
   }
 
+  private def ivfArtifact(table: String): Generations.Artifact =
+    Generations.Artifact(table, Seq(table), Seq("_centroids"))
+
+  private def centroidsOf(spark: org.apache.spark.sql.SparkSession,
+      t: String): Array[Array[Double]] =
+    spark.table(t).orderBy(col("cluster")).collect()
+      .map(_.getSeq[Double](1).toArray)
+
   /** Build the NEXT IVF generation beside the live one — the long half
-    * of a compaction, runnable any time: the retrain reads the live
-    * table, which is never dropped mid-build, so serving continues
-    * through the whole rebuild, and a failed build leaves the live
-    * generation untouched (the staged `<table>__next` tables are the
-    * only debris, and even those are cleaned on a caught failure).
-    * Geometry (nCentroids) comes from the artifact, as in
-    * [[compactIvfIndex]]. Pair with [[promoteIvfGeneration]] in the
-    * maintenance window. */
+    * of a compaction ([[Generations.buildNext]]): the retrain excludes
+    * the tombstoned ids, so the new generation's files no longer hold
+    * them and its centroids forget them. Geometry (nCentroids) comes
+    * from the artifact, as in [[compactIvfIndex]]. Pair with
+    * [[promoteIvfGeneration]] in the maintenance window. */
   def buildNextIvfGeneration(spark: org.apache.spark.sql.SparkSession,
       table: String, idCol: String, vecCol: String, iters: Int = 3): Unit = {
     val nCentroids = loadIvfIndex(spark, table).centroids.length
-    val next = s"${table}__next"
-    // pin the build's input to the EXACT file set listed here (not the
-    // table name, whose scan would race concurrent upserts) and record
-    // it as the staged generation's basis: the promote diffs the live
-    // file list against it and re-admits anything admitted mid-build
-    // with the NEW centroids — no delta is lost at the swap
-    val basisFiles = graft.sources.Sources.tableDataFiles(spark, table)
-    val loc = graft.sources.Sources.tableLocationOf(spark, table)
-    try {
-      val input =
-        if (basisFiles.isEmpty) spark.table(table)
-        else spark.read.option("basePath", loc).parquet(basisFiles: _*)
-      // RECLAIM: tombstoned ids present at entry are excluded from the
-      // retrain — the new generation's files no longer contain them
-      // (physical erasure) AND its geometry forgets them (centroids
-      // trained without the deleted vectors); the consumed snapshot
-      // rides in the basis so the promote retires exactly those entries
-      val tombFiles = graft.operators.Tombstones.snapshotFiles(spark, table)
-      val idx = ivfIndex(
-        graft.operators.Tombstones.maskByFiles(spark,
-          input.drop("cluster"), tombFiles), idCol, vecCol,
-        nCentroids, iters)
-      saveIvfIndex(idx, next)
-      // basis LAST: a torn build leaves no basis, so it can never
-      // mis-drive a catch-up (and the promote falls back to plain swap)
-      graft.sources.Sources.writeBuildBasis(spark, s"${next}_basis",
-        basisFiles.map(0 -> _), idCol, vecCol, tombFiles = tombFiles)
-    } catch {
-      case e: Throwable =>
-        graft.sources.Sources.replaceTable(spark, next)
-        graft.sources.Sources.replaceTable(spark, s"${next}_centroids")
-        graft.sources.Sources.replaceTable(spark, s"${next}_basis")
-        throw e
-    }
+    val a = ivfArtifact(table)
+    Generations.buildNext(spark, a, vecCol)(b => saveIvfIndex(
+      ivfIndex(b.input(0).drop("cluster"), idCol, vecCol, nCentroids, iters),
+      a.staged(0)))
   }
 
   /** Promote a fully-built staged IVF generation over the live one —
-    * the short half of a compaction: a CATCH-UP pass re-admits anything
-    * admitted into the live artifact since the build's basis snapshot
-    * (see [[catchUpTrained]]), then two metadata-only
-    * [[graft.sources.Sources.promoteTable]] swaps, so the serve gap is
-    * the rename plus O(delta), never O(corpus). The only inconsistency
-    * window is between the two promotes (new rows visible with old
-    * centroids), which the off-serve maintenance cadence covers. Fails
-    * fast if no staged generation exists. Pass the streaming sink's
-    * `segDir` so segments admitted after the pre-build fold are
-    * re-assigned with the NEW centroids instead of serving stale
-    * cluster ids against the retrained geometry. */
+    * the short half of a compaction ([[Generations.promote]]): the
+    * catch-up re-ASSIGNS rows admitted since the build (upserted files
+    * and, with the streaming sink's `segDir`, unledgered segments) with
+    * the NEW centroids, so no stale cluster id serves against the
+    * retrained geometry; then the centroids swap, then the table. */
   def promoteIvfGeneration(spark: org.apache.spark.sql.SparkSession,
       table: String, segDir: Option[String] = None): IvfIndex = {
-    val next = s"${table}__next"
-    // the main staged table alone gates the promote: a crash between the
-    // centroids promote and the table promote leaves `next` present but
-    // `next_centroids` already swapped — re-running this completes the
-    // swap (promoteTable's resume path handles the half-promoted side)
-    require(spark.catalog.tableExists(next),
-      s"no staged generation to promote for '$table' — run " +
-        "buildNextIvfGeneration (or compactIvfIndex) first")
-    catchUpTrained(spark, table, segDir, staleCols = Seq("cluster"),
-      admit = (rows, _, vecCol) => {
-        // a promote RERUN may find the centroids sibling already
-        // swapped (crash between the two promotes) — the new
-        // generation's centroids then live under the live name
-        val src = if (spark.catalog.tableExists(s"${next}_centroids"))
-          next else table
-        val centroids = spark.table(s"${src}_centroids")
-          .orderBy(col("cluster")).collect()
-          .map(_.getSeq[Double](1).toArray)
-        val v = col(vecCol)
-        rows.filter(v.isNotNull)
-          .withColumn("cluster", nearestCentroidCos(v, centroids))
-          .write.mode("append").format("parquet")
-          .partitionBy("cluster").saveAsTable(next)
-      })
-    val (consumedTomb, _) =
-      graft.sources.Sources.readBasisReclaim(spark, s"${next}_basis")
-    graft.sources.Sources.promoteTable(spark, s"${next}_centroids",
-      s"${table}_centroids")
-    graft.sources.Sources.promoteTable(spark, next, table)
-    // read-your-own-writes under a nonzero stamp TTL: the promoting
-    // session must probe with the new generation's centroids now
-    cachesFor(spark).centroids.remove(table)
-    // retire the tombstones the staged retrain consumed (their rows are
-    // physically absent from the promoted generation); mid-build deletes
-    // stay residual — still masked at serve, reclaimed next cadence. A
-    // crash before this leaves consumed entries masking already-absent
-    // ids: a serve no-op, healed by the next compaction.
-    graft.operators.Tombstones.retireConsumed(spark, table, consumedTomb)
-    graft.sources.Sources.replaceTable(spark, s"${next}_basis")
+    val a = ivfArtifact(table)
+    Generations.promote(spark, a, segDir,
+      admit = (_, rows, basis) => appendAssigned(rows.drop("cluster"),
+        basis.vecCol, centroidsOf(spark, a.newest(spark, "_centroids")),
+        a.staged(0)),
+      // read-your-own-writes under a nonzero stamp TTL
+      afterSwap = () => cachesFor(spark).centroids.remove(table))
     loadIvfIndex(spark, table)
-  }
-
-  /** CATCH-UP for a trained family's staged promote — the closing of
-    * the concurrent-maintenance window: rows admitted into the LIVE
-    * artifact after the staged build's basis snapshot (upserted base
-    * files ∪ complete, unledgered streaming segments) are re-admitted
-    * into the STAGED generation with ITS parameters before the swap.
-    * Without this, a delta upserted during a long retrain would vanish
-    * at the promote, and a segment admitted after the pre-build fold
-    * would serve OLD-generation assignments against the new geometry
-    * (silent recall loss). Cost is O(delta): only the diffed files and
-    * unledgered segments are read — the corpus is never re-scanned.
-    *
-    * Idempotence: the segments go through the ledgered fold
-    * ([[graft.operators.Segments]]) with the staged table as its
-    * target, and consumed base files commit into the basis AFTER their
-    * append — a retry skips what already committed. The residual window
-    * (append committed, commit didn't) re-admits on retry:
-    * exact-duplicate rows under the same documented id-dedup recovery
-    * every append path carries. The ledger commit and the segment
-    * deletes land BEFORE the swap on purpose: the ledger hides the
-    * consumed segments from the OLD generation's serve, which a crash
-    * before the swap leaves briefly short of them (one promote rerun
-    * heals it) — strictly better than the alternative ordering, where a
-    * crash would serve stale-assignment segments against the NEW
-    * generation: wrong results, not missing ones. A basis-less staged
-    * build (pre-basis or torn) degrades to the plain swap. */
-  private def catchUpTrained(spark: org.apache.spark.sql.SparkSession,
-      table: String, segDir: Option[String], staleCols: Seq[String],
-      admit: (DataFrame, String, String) => Unit): Unit = {
-    val basisTable = s"${table}__next_basis"
-    graft.sources.Sources.readBuildBasis(spark, basisTable).foreach {
-      case (basis, idCol, vecCol) =>
-        segDir.foreach(d => graft.operators.Segments.foldInto(spark, table, d)(
-          segs => admit(graft.operators.Segments.read(spark, d, segs)
-            .drop(staleCols: _*), idCol, vecCol)))
-        val loc = graft.sources.Sources.tableLocationOf(spark, table)
-        val delta = graft.sources.Sources.tableDataFiles(spark, table)
-          .filterNot(f => basis.contains((0, f)))
-        if (delta.nonEmpty) {
-          admit(spark.read.option("basePath", loc).parquet(delta: _*)
-            .drop(staleCols: _*), idCol, vecCol)
-          // the rewrite preserves the build's reclaim half (consumed
-          // tombstone snapshot + token) — a catch-up must not make the
-          // promote forget which tombstones the staged rewrite consumed
-          val (tombFiles, token) =
-            graft.sources.Sources.readBasisReclaim(spark, basisTable)
-          graft.sources.Sources.writeBuildBasis(spark, basisTable,
-            (basis ++ delta.map(0 -> _)).toSeq, idCol, vecCol,
-            tombFiles = tombFiles, token = token)
-        }
-    }
   }
 
   /** Load the IVF index over base table ∪ streaming-admitted segments
@@ -1147,13 +958,7 @@ object Similarity {
     // codebooks: generation-stamp keyed like loadIvfIndex's centroids
     val codebooks = graft.sources.Sources.stamped(spark,
       cachesFor(spark).codebooks, table, s"${table}_codebooks",
-      alsoRefresh = Seq(table)) {
-      val rows = spark.table(s"${table}_codebooks")
-        .orderBy(col("subspace"), col("code")).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      rows.groupBy(_._1).toSeq.sortBy(_._1)
-        .map(_._2.sortBy(_._2).map(_._3)).toArray
-    }
+      alsoRefresh = Seq(table))(codebooksOf(spark, s"${table}_codebooks"))
     // takedown masking, as in loadIvfIndex
     PqIndex(graft.operators.Tombstones.mask(spark, table,
       spark.table(table)), codebooks)
@@ -1169,13 +974,16 @@ object Similarity {
     * own cadence. Null vectors are dropped, as in [[pqIndex]]; identity
     * is append-only — the caller owns id uniqueness. */
   def upsertPqIndex(delta: DataFrame, idCol: String, vecCol: String,
-      table: String): Unit = {
+      table: String): Unit = appendEncoded(delta, vecCol,
+    loadPqIndex(delta.sparkSession, table).codebooks, table)
+
+  /** Encode `rows` with `codebooks`, append into `t`. */
+  private def appendEncoded(rows: DataFrame, vecCol: String,
+      codebooks: Array[Array[Array[Double]]], t: String): Unit = {
     import graft.functions.VectorExpressions.{vec_l2_normalize, pq_encode}
-    val spark = delta.sparkSession
-    val codebooks = loadPqIndex(spark, table).codebooks
-    delta.filter(col(vecCol).isNotNull)
+    rows.filter(col(vecCol).isNotNull)
       .withColumn("pq_code", pq_encode(vec_l2_normalize(col(vecCol)), codebooks))
-      .write.mode("append").format("parquet").saveAsTable(table)
+      .write.mode("append").format("parquet").saveAsTable(t)
   }
 
   /** Load the PQ index over base table ∪ streaming-admitted segments
@@ -1208,9 +1016,7 @@ object Similarity {
     * half of [[upsertPqIndex]]'s frozen-codebook contract, mirroring
     * [[compactIvfIndex]]: re-run per-subspace k-means over the table's
     * CURRENT content (corpus ∪ every upserted delta) and re-encode the
-    * whole corpus into a fresh generation, built under `<table>__next`
-    * while the live artifact keeps serving and promoted by a
-    * metadata-only rename ([[graft.sources.Sources.promoteTable]]). */
+    * whole corpus into a fresh staged generation ([[Generations]]). */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, idCol: String, vecCol: String,
       iters: Int = 8, sampleN: Int = 2048,
@@ -1222,10 +1028,19 @@ object Similarity {
     promotePqGeneration(spark, table, segDir)
   }
 
+  private def pqArtifact(table: String): Generations.Artifact =
+    Generations.Artifact(table, Seq(table), Seq("_codebooks"))
+
+  private def codebooksOf(spark: org.apache.spark.sql.SparkSession,
+      t: String): Array[Array[Array[Double]]] =
+    spark.table(t).orderBy(col("subspace"), col("code")).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_._2).map(_._3)).toArray
+
   /** Build the NEXT PQ generation beside the live one — the long half
     * of a compaction ([[buildNextIvfGeneration]]'s discipline): retrain
-    * per-subspace k-means + re-encode into `<table>__next` while the
-    * live artifact keeps serving; a failed build leaves it untouched.
+    * per-subspace k-means without the tombstoned ids and re-encode.
     * Geometry comes from the ARTIFACT (codebook tensor shape), never
     * from caller defaults — a silently re-shaped compaction would make
     * the next pqIndexFor(m/nCodes = <old>) rebuild from its base
@@ -1244,78 +1059,26 @@ object Similarity {
     require(m > 0 && nCodes > 1 && subDim > 0,
       s"artifact $table has a degenerate codebook shape (m=$m, " +
         s"nCodes=$nCodes, subDim=$subDim)")
-    val next = s"${table}__next"
-    // basis-pinned input + basis-written-last: the [[buildNextIvfGeneration]]
-    // concurrent-upsert discipline — the promote re-encodes anything
-    // admitted mid-build with the NEW codebooks instead of losing it
-    val basisFiles = graft.sources.Sources.tableDataFiles(spark, table)
-    try {
-      val input =
-        if (basisFiles.isEmpty) spark.table(table)
-        else spark.read.parquet(basisFiles: _*)
-      // RECLAIM, as in buildNextIvfGeneration: the retrain excludes
-      // tombstoned ids — codebooks forget them, files no longer carry them
-      val tombFiles = graft.operators.Tombstones.snapshotFiles(spark, table)
-      val idx = pqIndex(
-        graft.operators.Tombstones.maskByFiles(spark,
-          input.drop("pq_code"), tombFiles), idCol, vecCol,
-        dims = m * subDim, m, nCodes, iters, sampleN)
-      savePqIndex(idx, next)
-      graft.sources.Sources.writeBuildBasis(spark, s"${next}_basis",
-        basisFiles.map(0 -> _), idCol, vecCol, tombFiles = tombFiles)
-    } catch {
-      case e: Throwable =>
-        graft.sources.Sources.replaceTable(spark, next)
-        graft.sources.Sources.replaceTable(spark, s"${next}_codebooks")
-        graft.sources.Sources.replaceTable(spark, s"${next}_basis")
-        throw e
-    }
+    val a = pqArtifact(table)
+    Generations.buildNext(spark, a, vecCol)(b => savePqIndex(
+      pqIndex(b.input(0).drop("pq_code"), idCol, vecCol,
+        dims = m * subDim, m, nCodes, iters, sampleN), a.staged(0)))
   }
 
   /** Promote a fully-built staged PQ generation over the live one — the
-    * short half ([[promoteIvfGeneration]]'s discipline): a catch-up
-    * pass re-ENCODES anything admitted since the build's basis snapshot
-    * (upserted files ∪ unledgered [[graft.streaming.Streaming
-    * .pqIngestSink]] segments, whose old-codebook codes the retrain
-    * invalidated) with the NEW codebooks, then the metadata-only swaps.
-    * Fails fast if no staged generation exists. */
+    * short half ([[promoteIvfGeneration]]'s discipline): the catch-up
+    * re-ENCODES rows admitted since the build (upserted files ∪
+    * unledgered [[graft.streaming.Streaming.pqIngestSink]] segments,
+    * whose old-codebook codes the retrain invalidated) with the NEW
+    * codebooks. */
   def promotePqGeneration(spark: org.apache.spark.sql.SparkSession,
       table: String, segDir: Option[String] = None): PqIndex = {
-    val next = s"${table}__next"
-    // the main staged table alone gates the promote: a crash between the
-    // codebooks promote and the table promote leaves `next` present but
-    // `next_codebooks` already swapped — re-running this completes the
-    // swap (promoteTable's resume path handles the half-promoted side)
-    require(spark.catalog.tableExists(next),
-      s"no staged generation to promote for '$table' — run " +
-        "buildNextPqGeneration (or compactPqIndex) first")
-    catchUpTrained(spark, table, segDir, staleCols = Seq("pq_code"),
-      admit = (rows, _, vecCol) => {
-        import graft.functions.VectorExpressions.{vec_l2_normalize, pq_encode}
-        // rerun-safe codebook source, as in the IVF promote
-        val src = if (spark.catalog.tableExists(s"${next}_codebooks"))
-          next else table
-        val books = spark.table(s"${src}_codebooks")
-          .orderBy(col("subspace"), col("code")).collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-          .groupBy(_._1).toSeq.sortBy(_._1)
-          .map(_._2.sortBy(_._2).map(_._3)).toArray
-        rows.filter(col(vecCol).isNotNull)
-          .withColumn("pq_code",
-            pq_encode(vec_l2_normalize(col(vecCol)), books))
-          .write.mode("append").format("parquet").saveAsTable(next)
-      })
-    val (consumedTomb, _) =
-      graft.sources.Sources.readBasisReclaim(spark, s"${next}_basis")
-    graft.sources.Sources.promoteTable(spark, s"${next}_codebooks",
-      s"${table}_codebooks")
-    graft.sources.Sources.promoteTable(spark, next, table)
-    // read-your-own-writes under a nonzero stamp TTL: the promoting
-    // session must encode/probe with the new generation's codebooks now
-    cachesFor(spark).codebooks.remove(table)
-    // retire consumed tombstones (promoteIvfGeneration's discipline)
-    graft.operators.Tombstones.retireConsumed(spark, table, consumedTomb)
-    graft.sources.Sources.replaceTable(spark, s"${next}_basis")
+    val a = pqArtifact(table)
+    Generations.promote(spark, a, segDir,
+      admit = (_, rows, basis) => appendEncoded(rows.drop("pq_code"),
+        basis.vecCol, codebooksOf(spark, a.newest(spark, "_codebooks")),
+        a.staged(0)),
+      afterSwap = () => cachesFor(spark).codebooks.remove(table))
     loadPqIndex(spark, table)
   }
 

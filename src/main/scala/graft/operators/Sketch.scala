@@ -109,12 +109,10 @@ object Sketch {
     * rows down to one row per finest group — layout hygiene for the
     * append-only upsert path; content is invariant (sketch union is
     * associative) up to the documented estimator nudges inside the
-    * error band. Staged-generation discipline with the
-    * concurrent-maintenance catch-up: the rewrite is pinned to the file
-    * set listed at entry, a delta upserted mid-rewrite is COPIED
-    * verbatim into the staged cube at the promote (sketch rows are
-    * generation-independent — nothing re-derives), and the swap is
-    * metadata-only ([[graft.sources.Sources.promoteTable]]). */
+    * error band. A staged generation ([[Generations]]): a delta
+    * upserted mid-rewrite is COPIED verbatim into the staged cube at the
+    * promote (sketch rows are generation-independent — nothing
+    * re-derives). */
   def compactDistinctCube(spark: org.apache.spark.sql.SparkSession,
       table: String, keys: Seq[String]): Unit = {
     buildNextSketchCube(spark, table, rollupSketches(_, keys))
@@ -134,14 +132,13 @@ object Sketch {
     * HLL registers cannot subtract, so deletion is a REBUILD of the
     * cube over corpus-minus-tombstones — ONE aggregate over the
     * reduced corpus (the corpus scan is the documented price of sketch
-    * takedown; there is no cheaper exact path), staged-promoted under
-    * the shared maintenance discipline: built beside the live cube
-    * (which keeps serving throughout), sketch rows upserted mid-rebuild
+    * takedown; there is no cheaper exact path), staged-promoted like a
+    * compaction ([[Generations]]): sketch rows upserted mid-rebuild are
     * copied verbatim into the staged cube at the promote (they are
     * fresh admissions, not part of the takedown request — a delta that
     * OVERLAPS the tombstoned ids is the caller's sequencing error,
     * exactly as re-admitting a deleted doc is on the mask-based
-    * families), then the metadata-only swap. The promoted cube's files
+    * families). The promoted cube's files
     * never contained the deleted rows' contributions — physical erasure
     * in one step, no residual tombstones to reclaim.
     *
@@ -175,61 +172,27 @@ object Sketch {
     promoteSketchCube(spark, table)
   }
 
-  /** The long half of a cube compaction: basis-pinned re-merge into
-    * `<table>__next`, basis committed LAST (the
-    * [[graft.operators.Search.buildNextBm25Layout]] discipline). */
+  /** The long half of a cube compaction: `merge` over the pinned cube
+    * into the staged cube ([[Generations.buildNext]]). */
   def buildNextSketchCube(spark: org.apache.spark.sql.SparkSession,
       table: String, merge: DataFrame => DataFrame): Unit = {
-    val next = s"${table}__next"
-    val files = graft.sources.Sources.tableDataFiles(spark, table)
-    try {
-      val content =
-        if (files.isEmpty) spark.table(table)
-        else spark.read.parquet(files: _*)
-      graft.sources.Sources.replaceTable(spark, next)
-      merge(content).write.format("parquet")
-        .options(graft.sources.Sources.stagedWriteOptions(spark, next))
-        .saveAsTable(next)
-      graft.sources.Sources.writeBuildBasis(spark, s"${next}_basis",
-        files.map(0 -> _), "", "")
-    } catch {
-      case e: Throwable =>
-        graft.sources.Sources.replaceTable(spark, next)
-        graft.sources.Sources.replaceTable(spark, s"${next}_basis")
-        throw e
+    val a = Generations.Artifact(table, Seq(table))
+    Generations.buildNext(spark, a) { b =>
+      graft.sources.Sources.replaceTable(spark, a.staged(0))
+      merge(b.input(0)).write.format("parquet")
+        .options(graft.sources.Sources.stagedWriteOptions(spark, a.staged(0)))
+        .saveAsTable(a.staged(0))
     }
   }
 
-  /** The short half: catch up any rows upserted since the build's basis
-    * snapshot (verbatim copy — sketch rows are generation-independent,
-    * and the serve-side rollup merges the copied rows exactly as it
-    * merged them against the old layout), then the metadata-only swap.
-    * Resumes after a crashed-post-swap promote (staged gone, basis
-    * present) by finishing the basis drop. */
+  /** The short half ([[Generations.promote]]): the catch-up copies rows
+    * upserted since the build verbatim — the serve-side rollup merges
+    * them exactly as it merged them against the old layout. */
   def promoteSketchCube(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
-    val next = s"${table}__next"
-    val basisTable = s"${next}_basis"
-    val resume = !spark.catalog.tableExists(next) &&
-      spark.catalog.tableExists(basisTable)
-    require(spark.catalog.tableExists(next) || resume,
-      s"no staged cube to promote for '$table' — run " +
-        "buildNextSketchCube (or compact*Cube) first")
-    if (!resume) {
-      graft.sources.Sources.readBuildBasis(spark, basisTable)
-        .foreach { case (basis, _, _) =>
-          val delta = graft.sources.Sources.tableDataFiles(spark, table)
-            .filterNot(f => basis.contains((0, f)))
-          if (delta.nonEmpty) {
-            spark.read.parquet(delta: _*)
-              .write.mode("append").format("parquet").saveAsTable(next)
-            graft.sources.Sources.writeBuildBasis(spark, basisTable,
-              (basis ++ delta.map(0 -> _)).toSeq, "", "")
-          }
-        }
-      graft.sources.Sources.promoteTable(spark, next, table)
-    }
-    graft.sources.Sources.replaceTable(spark, basisTable)
+    val a = Generations.Artifact(table, Seq(table))
+    Generations.promote(spark, a, admit = (_, rows, _) =>
+      rows.write.mode("append").format("parquet").saveAsTable(a.staged(0)))
   }
 
   /** Load a persisted sketch cube over base ∪ streaming-admitted

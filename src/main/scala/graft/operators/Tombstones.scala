@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   *    alone never meets), and the consumed tombstones leave the
   *    sibling at the promote. Tombstones admitted mid-build stay in
   *    the residual set — still masked at serve, reclaimed by the next
-  *    cadence.
+  *    cadence. The snapshot, the consumed list and the retire order
+  *    are [[Generations]]' contract.
   *
   * The tombstone table's single data column keeps the ID COLUMN NAME
   * the caller deleted with, which must be the name the artifact stores
@@ -140,8 +141,9 @@ private[graft] object Tombstones {
     if (files.isEmpty) df else antiJoin(df, spark.read.parquet(files: _*))
 
   /** Retire the snapshot a reclaiming promote consumed: keep only the
-    * sibling's files NOT in `consumed`. Post-swap, crash-safe (see
-    * [[retainResidual]]). */
+    * sibling's files NOT in `consumed`. A post-swap step of
+    * [[Generations.promote]], whose basis keeps `consumed` until it ran
+    * (a rerun after a crash retires them then). */
   def retireConsumed(spark: SparkSession, artifact: String,
       consumed: Seq[String]): Unit =
     if (consumed.nonEmpty) {

@@ -700,44 +700,6 @@ object Sources {
       .flatMap(p => dataFilesUnder(spark,
         new org.apache.hadoop.fs.Path(p.location).toString))
 
-  /** BUILD BASIS of a staged generation: exactly the live-table files
-    * its build consumed, committed as the one-table `<staged>_basis`
-    * sibling so the PROMOTE can diff the live table's current files
-    * against it and re-admit anything that arrived mid-build (the
-    * concurrent-upsert catch-up — without it, a delta admitted between
-    * the build's snapshot and the promote would vanish at the swap).
-    * Schema `(proj, file, id_col, vec_col)`: `proj` keys multi-table
-    * layouts (LSH projections; single-table families use 0), and the
-    * `proj = -1` row carries the build's column meta so an empty file
-    * set still round-trips. Written LAST by the staged builders — a
-    * torn build has no basis and its promote falls back to the plain
-    * swap. The catch-up rewrites it (basis ∪ consumed delta) in the
-    * same one-commit idiom as the fold ledger, making a crashed
-    * catch-up retry skip what already landed.
-    *
-    * RECLAIM extension: `proj = -2` rows record the tombstone files the
-    * staged rewrite CONSUMED (it filtered their ids out of the new
-    * generation's content), so the promote can subtract exactly those
-    * from the live tombstone sibling — deletes issued mid-build stay in
-    * the residual set, still masked at serve. The `-1` meta row's
-    * `file` field carries the build's unique token, the idempotence
-    * guard for the one promote step that mutates live state in place
-    * (BM25's stats subtraction). Catch-up basis rewrites preserve
-    * both. */
-  private[graft] def writeBuildBasis(spark: SparkSession,
-      basisTable: String, files: Seq[(Int, String)], idCol: String,
-      vecCol: String, tombFiles: Seq[String] = Nil,
-      token: String = ""): Unit = {
-    import spark.implicits._
-    replaceTable(spark, basisTable)
-    ((-1, token) +: (tombFiles.map(-2 -> _) ++ files))
-      .map { case (t, f) => (t, f, idCol, vecCol) }
-      .toDF("proj", "file", "id_col", "vec_col")
-      .write.mode("overwrite").format("parquet")
-      .options(stagedWriteOptions(spark, basisTable))
-      .saveAsTable(basisTable)
-  }
-
   /** Conform a raw-file read to `schema` (names, order, types): a
     * partitioned read through `basePath` re-INFERS partition-column
     * types from directory names (e.g. a stored `bucket: long` comes
@@ -749,33 +711,6 @@ object Sources {
       : org.apache.spark.sql.DataFrame =
     df.select(schema.fields.toSeq.map(f =>
       org.apache.spark.sql.functions.col(f.name).cast(f.dataType)): _*)
-
-  /** The staged build's basis — `(file set keyed by projection, id_col,
-    * vec_col)` — or None for a pre-basis or torn build (plain-swap
-    * promote). Driver-side like every file listing. */
-  private[graft] def readBuildBasis(spark: SparkSession,
-      basisTable: String): Option[(Set[(Int, String)], String, String)] =
-    if (!spark.catalog.tableExists(basisTable)) None
-    else {
-      val rows = spark.table(basisTable).collect()
-      rows.find(_.getInt(0) == -1).map { meta =>
-        (rows.filter(_.getInt(0) >= 0)
-          .map(r => (r.getInt(0), r.getString(1))).toSet,
-          meta.getString(2), meta.getString(3))
-      }
-    }
-
-  /** The basis's RECLAIM half — (consumed tombstone files, build
-    * token); empty/"" for a basis written by a build that saw no
-    * tombstones (or predates the reclaim schema). */
-  private[graft] def readBasisReclaim(spark: SparkSession,
-      basisTable: String): (Seq[String], String) =
-    if (!spark.catalog.tableExists(basisTable)) (Nil, "")
-    else {
-      val rows = spark.table(basisTable).collect()
-      (rows.filter(_.getInt(0) == -2).map(_.getString(1)).toSeq,
-        rows.find(_.getInt(0) == -1).map(_.getString(1)).getOrElse(""))
-    }
 
   /** Path schemes where a directory rename is a COPY of every object —
     * the object-store regimes that take the `SET LOCATION` promote
@@ -830,7 +765,9 @@ object Sources {
     * movement; the catalog pointer flips to the staged data in place).
     * Both regimes require staged and live generations to share schema
     * and partition layout, which every artifact family's rebuild does by
-    * construction. */
+    * construction. The serving-artifact families reach it only through
+    * [[graft.operators.Generations]], which owns the swap order and the
+    * family-level resume rule. */
   private[graft] def promoteTable(spark: SparkSession, staged: String,
       live: String,
       beforeRetire: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, StreamingQuery}
 import scala.util.control.NonFatal
-import graft.operators.Segments
+import graft.operators.{Generations, Segments}
 
 /** Event projection for the custom-state operator. */
 case class UserEvent(user_id: Long, value: Double)
@@ -261,7 +261,10 @@ object Streaming {
       confs: => Seq[(String, String)])(start: => T): T =
     startLock.synchronized {
       val scoped = confs
-      val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
+      // getAll, not getOption: getOption answers an unset key with its
+      // registered default, which the restore would then set explicitly
+      val all = spark.conf.getAll
+      val prev = scoped.map { case (k, _) => k -> all.get(k) }
       try {
         scoped.foreach { case (k, v) => spark.conf.set(k, v) }
         start
@@ -695,10 +698,26 @@ object Streaming {
     * complete segments are read ([[graft.operators.Segments]]). The
     * index table is dropped and rebuilt — callers key `table` by corpus
     * generation (the `artifactTable` mtime idiom) when the corpus
-    * itself can also change. */
+    * itself can also change. A staged generation
+    * ([[graft.operators.Generations]]) with no catch-up: the index takes
+    * no upserts, so nothing is admitted mid-build. */
   def compactNearDedupIndex(corpus: DataFrame, admittedDir: String,
       idCol: String, textCol: String, table: String,
       n: Int = 3, buckets: Int = 32): DataFrame = {
+    val spark = corpus.sparkSession
+    buildNextNearDedupIndex(corpus, admittedDir, idCol, textCol, table, n,
+      buckets)
+    Generations.promote(spark, nearDedupArtifact(table))
+    spark.table(table)
+  }
+
+  private def nearDedupArtifact(table: String): Generations.Artifact =
+    Generations.Artifact(table, Nil, Seq("_meta", ""))
+
+  /** The build half of [[compactNearDedupIndex]]. */
+  private[graft] def buildNextNearDedupIndex(corpus: DataFrame,
+      admittedDir: String, idCol: String, textCol: String, table: String,
+      n: Int, buckets: Int): Unit = {
     import graft.operators.Contamination
     val spark = corpus.sparkSession
     // a day where the stream admitted nothing (no complete segment, or
@@ -735,35 +754,18 @@ object Streaming {
     // RECLAIM ([[graft.operators.Tombstones]]): documents deleted from
     // the serving index ([[graft.operators.Contamination.deleteDocs]])
     // are excluded from the rebuild — the promoted generation's files no
-    // longer contain their shingles (physical erasure) — and the
-    // consumed snapshot retires after the swap; deletes issued
-    // mid-rebuild stay residual, still masked by shingleIndexFor's serve
-    val tombFiles = graft.operators.Tombstones.snapshotFiles(spark, table)
-    val reclaimed =
-      if (tombFiles.isEmpty) unioned
-      else unioned.join(
-        broadcast(spark.read.parquet(tombFiles: _*)
-          .select(col("id").as(idCol)).dropDuplicates(idCol)),
-        Seq(idCol), "left_anti")
-    // next generation built beside the live index (the compactIvfIndex
-    // discipline): the live table keeps serving through the whole
-    // shingle rebuild, the promote is metadata-only, and a failed build
-    // never touched the serving generation
-    val next = s"${table}__next"
-    graft.sources.Sources.replaceTable(spark, next)
-    graft.sources.Sources.replaceTable(spark, s"${next}_meta")
-    try Contamination.shingleIndexFor(reclaimed, idCol, textCol, next, n, buckets)
-    catch {
-      case e: Throwable =>
-        graft.sources.Sources.replaceTable(spark, next)
-        graft.sources.Sources.replaceTable(spark, s"${next}_meta")
-        throw e
+    // longer contain their shingles (physical erasure)
+    val a = nearDedupArtifact(table)
+    Generations.buildNext(spark, a) { b =>
+      // the index's tombstones key on its `id` column
+      val reclaimed = graft.operators.Tombstones.maskByFiles(spark,
+        unioned.withColumnRenamed(idCol, "id"), b.tombFiles)
+        .withColumnRenamed("id", idCol)
+      // shingleIndexFor builds only if missing: clear a stale staged pair
+      a.swaps.foreach(sw => graft.sources.Sources.replaceTable(spark, sw._1))
+      Contamination.shingleIndexFor(reclaimed, idCol, textCol,
+        a.swaps.last._1, n, buckets)
     }
-    graft.sources.Sources.promoteTable(spark, s"${next}_meta",
-      s"${table}_meta")
-    graft.sources.Sources.promoteTable(spark, next, table)
-    graft.operators.Tombstones.retireConsumed(spark, table, tombFiles)
-    spark.table(table)
   }
 
   /** Streaming ANN ingest — the live admission path for the IVF serving

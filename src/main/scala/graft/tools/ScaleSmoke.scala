@@ -291,7 +291,7 @@ object ScaleSmoke {
     // ---------------------------------------------------------------
     // Staged-compaction serve outage (round 11): the promoteTable claim,
     // measured. A compaction's cost splits into the BUILD (retrain +
-    // rewrite into <table>__next — the live generation keeps serving
+    // rewrite into the staged generation — the live one keeps serving
     // through all of it) and the PROMOTE (drop + catalog rename +
     // partition re-listing — the only serve gap). The claim worth a
     // number: the gap is metadata-scale and STAYS metadata-scale as the
@@ -314,16 +314,12 @@ object ScaleSmoke {
         val tbl = s"scale_compact_outage_$k"
         Similarity.saveIvfIndex(Similarity.ivfIndex(corpus, "vec_id",
           "embedding", nCentroids = 16, iters = 3), tbl) // live gen, untimed
-        val next = s"${tbl}__next"
         val t0 = System.nanoTime()
-        Similarity.saveIvfIndex(Similarity.ivfIndex(
-          spark.table(tbl).drop("cluster"), "vec_id", "embedding",
-          nCentroids = 16, iters = 3), next)
+        Similarity.buildNextIvfGeneration(spark, tbl, "vec_id", "embedding",
+          iters = 3)
         val tBuild = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
-        graft.sources.Sources.promoteTable(spark, s"${next}_centroids",
-          s"${tbl}_centroids")
-        graft.sources.Sources.promoteTable(spark, next, tbl)
+        Similarity.promoteIvfGeneration(spark, tbl)
         val tPromote = (System.nanoTime() - t1) / 1e9
         require(spark.table(tbl).count() == corpus.count(),
           s"promoted generation lost rows at $k×")
@@ -470,8 +466,7 @@ object ScaleSmoke {
           shufflePartitionsFor(k).toString)
         val full = frames(k)
         val tbl = s"scale_takedown_$k"
-        Seq(tbl, s"${tbl}_stats", s"${tbl}_deleted", s"${tbl}__next",
-          s"${tbl}__next_basis").foreach(
+        Seq(tbl, s"${tbl}_stats", s"${tbl}_deleted", s"${tbl}__next").foreach(
           graft.sources.Sources.replaceTable(spark, _))
         Search.saveBm25Index(
           Search.buildBm25Index(full, "doc_id", "text"), tbl) // untimed
@@ -592,7 +587,7 @@ object ScaleSmoke {
 
         val ivfT = s"scale_td_ivf_$k"
         Seq(ivfT, s"${ivfT}_centroids", s"${ivfT}_folded", s"${ivfT}_deleted",
-          s"${ivfT}__next", s"${ivfT}__next_centroids", s"${ivfT}__next_basis")
+          s"${ivfT}__next", s"${ivfT}__next_centroids")
           .foreach(graft.sources.Sources.replaceTable(spark, _))
         out("ivf") = familyOnce(
           build = () => Similarity.saveIvfIndex(Similarity.ivfIndex(emb,
@@ -606,7 +601,7 @@ object ScaleSmoke {
 
         val pqT = s"scale_td_pq_$k"
         Seq(pqT, s"${pqT}_codebooks", s"${pqT}_folded", s"${pqT}_deleted",
-          s"${pqT}__next", s"${pqT}__next_codebooks", s"${pqT}__next_basis")
+          s"${pqT}__next", s"${pqT}__next_codebooks")
           .foreach(graft.sources.Sources.replaceTable(spark, _))
         out("pq") = familyOnce(
           build = () => Similarity.savePqIndex(Similarity.pqIndex(emb,
@@ -621,8 +616,8 @@ object ScaleSmoke {
           erased = () => assertErased("pq", k, Seq(pqT), pqT, rawDeadVec))
 
         val lshT = s"scale_td_lsh_$k"
-        (Seq(s"${lshT}_meta", s"${lshT}_folded", s"${lshT}_deleted",
-          s"${lshT}__next_basis") ++ (0 until 2).flatMap(t =>
+        (Seq(s"${lshT}_meta", s"${lshT}_folded", s"${lshT}_deleted") ++
+          (0 until 2).flatMap(t =>
           Seq(s"${lshT}_t$t", s"${lshT}_t${t}__next")))
           .foreach(graft.sources.Sources.replaceTable(spark, _))
         out("lsh") = familyOnce(

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Search, Similarity}
+import graft.operators.{Generations, Search, Similarity}
 import graft.sources.Sources
 
 /** The CONCURRENT-MAINTENANCE catch-up behind every staged-generation
@@ -62,12 +62,11 @@ class CatchUpSpec extends SparkSpec {
     // hand, then run the real promote as the "retry"
     val next = s"${table}__next"
     Similarity.upsertIvfIndex(delta, "vec_id", "embedding", next)
-    val (basis, idCol, vecCol) =
-      Sources.readBuildBasis(spark, s"${next}_basis").get
+    val basis = Generations.readBasis(spark, s"${next}_basis").get
     val nowFiles = Sources.tableDataFiles(spark, table)
-    Sources.writeBuildBasis(spark, s"${next}_basis",
-      nowFiles.map(0 -> _), idCol, vecCol)
-    assert(basis.size < nowFiles.size, "premise: the upsert added files")
+    Generations.writeBasis(spark, s"${next}_basis",
+      basis.copy(files = nowFiles.map(0 -> _).toSet))
+    assert(basis.files.size < nowFiles.size, "premise: the upsert added files")
     val idx = Similarity.promoteIvfGeneration(spark, table)
     assert(idx.assigned.count() == emb.count(),
       "retry double-admitted (or dropped) the delta")

@@ -1575,6 +1575,16 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a stream start restores an unset conf as unset, not as its " +
+      "registered default") {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.unset(key)
+    Streaming.runToBatch(Streaming.fileStream(spark, dir, "customer.parquet")
+      .groupBy().count(), "stream_spec_unset_conf")
+    assert(!spark.conf.getAll.contains(key),
+      s"the start left $key = ${spark.conf.getAll.get(key)} explicitly set")
+  }
+
   test("lshIngestSink: a failed part write surfaces only after its " +
       "sibling parts finish, in the streaming job group, and the " +
       "completeness marker is never written") {
